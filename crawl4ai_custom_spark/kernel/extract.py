@@ -7,7 +7,8 @@ collapsed into one deterministic call:
 
   scrap (clean/links/media/meta/tables)
     -> markdown (raw / citations / references)
-    -> fit pass (Pruning or BM25 content filter -> fit_html/fit_markdown)
+    -> fit pass (Pruning or BM25 content filter -> fit_markdown)
+  plus fit_html, the schema-preprocessed raw html (kernel/schemaprep.py)
 
 Per-row invariant: ``extract_page`` is pure — same (url, html, config) bytes
 in, same row out, regardless of partitioning or batch boundaries.
@@ -20,11 +21,7 @@ from typing import Any
 
 from .content_filter import BM25ContentFilter, PruningContentFilter
 from .htmldom import Node, parse_html
-from .markdown import (
-    MarkdownResult,
-    convert_links_to_citations,
-    html_to_markdown,
-)
+from .markdown import convert_links_to_citations, html_to_markdown
 from .schemaprep import fit_html_for_page
 from .scraper import ScrapeConfig, scrap
 
@@ -82,7 +79,6 @@ def extract_page(
         if cfg.citations:
             cited_md, references_md = convert_links_to_citations(raw_md)
 
-    filtered_html = ""
     fit_md = ""
     blocks = None
     if cfg.content_filter == "pruning":
@@ -97,27 +93,17 @@ def extract_page(
         ).filter_blocks(tree)
     if blocks is not None:
         # reference contract (markdown_generation_strategy.py:235-239):
-        # each surviving block is <div>-wrapped; blocks joined by newline;
-        # fit_markdown is the markdown of that wrapped document
-        filtered_html = "\n".join(f"<div>{b.to_html()}</div>" for b in blocks)
+        # each surviving block is <div>-wrapped; fit_markdown is the
+        # markdown of that wrapped document. The reference's
+        # markdown.fit_html (the filter's html, models.py:124) is not an
+        # output column: the row's fit_html is CrawlResult.fit_html, the
+        # schema-preprocessed RAW html (async_webcrawler.py:515,651).
         container = Node("#root")
         for b in blocks:
             d = Node("div")
             d.append(b)
             container.append(d)
         fit_md, _ = html_to_markdown(container)
-
-    # Two distinct fields in the reference: markdown.fit_html is the
-    # content-filter output (models.py:124), while CrawlResult.fit_html is
-    # the schema-preprocessed RAW html (async_webcrawler.py:515,651). The
-    # extract row carries the CrawlResult one.
-    md = MarkdownResult(
-        raw_markdown=raw_md,
-        markdown_with_citations=cited_md,
-        references_markdown=references_md,
-        fit_markdown=fit_md,
-        fit_html=filtered_html,
-    )
 
     links = [
         {**l, "is_internal": True} for l in sr.links_internal
@@ -129,10 +115,10 @@ def extract_page(
         "cleaned_html": sr.cleaned_html,
         "text": sr.text,
         "title": sr.title,
-        "raw_markdown": md.raw_markdown,
-        "markdown_with_citations": md.markdown_with_citations,
-        "references_markdown": md.references_markdown,
-        "fit_markdown": md.fit_markdown,
+        "raw_markdown": raw_md,
+        "markdown_with_citations": cited_md,
+        "references_markdown": references_md,
+        "fit_markdown": fit_md,
         "fit_html": fit_html,
         "links": links,
         "images": sr.images,

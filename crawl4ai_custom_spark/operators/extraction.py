@@ -257,13 +257,33 @@ def _ensure_parallelism(df: DataFrame, min_parallelism: int | None) -> DataFrame
         # repartition then serializes the whole CPU-bound python stage
         # onto one core (measured 2.7 s/wave single-task extraction in the
         # BFS bench). So a big/unknown estimate is double-checked against
-        # the plan's real pre-AQE partition count; only a genuinely
-        # wide input skips the shuffle.
-        if df.rdd.getNumPartitions() < target:
+        # the plan's partition count; only a genuinely wide input skips the
+        # shuffle. Scans declare no count, so only they compile the RDD.
+        n_parts = _planned_partitions(df)
+        if n_parts is None:
+            n_parts = df.rdd.getNumPartitions()
+        if n_parts < target:
             df = df.repartition(target)
     elif size_bytes < target * max_part:
         df = df.repartition(target)
     return df
+
+
+def _planned_partitions(df: DataFrame) -> int | None:
+    """Output partition count that ``df``'s physical plan declares, read
+    without running anything. An adaptive plan is read as planned, before
+    any of its stages run: df.rdd would instead run its broadcast and
+    shuffle stages once, and the real job then runs them again. None when
+    the plan declares no count (file and in-memory scans report
+    UnknownPartitioning(0))."""
+    try:
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+        n = int(plan.outputPartitioning().numPartitions())
+    except Exception:
+        return None
+    return n or None
 
 
 def schema_fit_html(

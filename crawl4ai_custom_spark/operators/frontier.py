@@ -42,7 +42,7 @@ import tempfile
 from dataclasses import dataclass, field
 from typing import Any
 
-from pyspark.sql import DataFrame, SparkSession, Window
+from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
 
 from ..kernel.extract import ExtractConfig
@@ -69,7 +69,7 @@ from .scorers import (
     page_context_terms,
     path_depth_score,
 )
-from .seen import PartitionedBloom, filter_unseen_exact
+from .seen import PartitionedBloom, empty_seen, filter_unseen_exact
 from .urlops import canonicalize_abs_udf, registrable_domain_udf, url_is_valid
 
 FRONTIER_DDL = (
@@ -77,6 +77,14 @@ FRONTIER_DDL = (
     "parent_url string, depth int, score double, discovered_wave int, "
     "link_pos int, retry_count int"
 )
+
+
+def _write_read(df: DataFrame, path: str) -> DataFrame:
+    """Write ``df`` as parquet and scan it back with the schema it was
+    written with: a bare read.parquet runs a Spark job to infer the footer
+    schema (~0.1 s each on the driver thread, several per wave)."""
+    df.write.mode("overwrite").parquet(path)
+    return df.sparkSession.read.schema(df.schema).parquet(path)
 
 
 def _parquet_rows(path: str, fallback: DataFrame | None = None) -> int:
@@ -117,6 +125,15 @@ def _parquet_count_eq(path: str, column: str, value: int,
     return n
 
 
+def _seen_union(spark: SparkSession, paths: list[str]) -> DataFrame:
+    """The exact seen set: one scan over its immutable url_hash deltas.
+    Every delta carries ``url_hash long``; reading with that schema skips
+    the per-path schema-inference job a bare read.parquet runs."""
+    if not paths:
+        return empty_seen(spark)
+    return spark.read.schema("url_hash long").parquet(*paths)
+
+
 @dataclass
 class CrawlConfig:
     strategy: str = "bfs"                  # bfs | best_first | dfs
@@ -148,9 +165,10 @@ class CrawlConfig:
     # still maintained so engagement later is seamless)
     bloom_min_seen: int = 200_000
     max_waves: int | None = None  # absolute wave bound (None -> strategy default)
-    seen_compact_every: int = 64  # compact the seen-delta union into one
-    # file when the path list reaches this width (bounds plan width for
-    # 100+-wave crawls, e.g. DFS; LSM-style amortized O(total/k) rewrites)
+    seen_compact_every: int = 64  # compact the seen deltas into one
+    # file when the path list reaches this width (bounds the seen scan's
+    # path list for 100+-wave crawls, e.g. DFS; LSM-style amortized
+    # O(total/k) rewrites)
     fairness_waves: int = 0  # >0: starvation aging — a row waiting more than
     # this many waves outranks all un-aged rows (dispatcher parity,
     # async_dispatcher.py:470-527); 0 disables
@@ -409,13 +427,14 @@ class FrontierEngine:
                      crawl_delays=self._crawl_delays)
 
     # ------------------------------------------------------------------
-    def _score_links(self, links: DataFrame) -> DataFrame:
-        """links: (href, text, title, base_domain, is_internal, link_pos,
-        parent_url, parent_depth [, parent_terms, parent_host])."""
+    def _link_score_cols(self, with_context: bool) -> tuple[Column, Column | None]:
+        """(composite link score, link-preview blended score or None).
+        Wave-invariant: run() builds them once and every wave reuses them
+        (building the scorer trees costs hundreds of py4j calls)."""
         cfg = self.cfg
         href = F.col("href")
-        ctx_terms = F.col("parent_terms") if "parent_terms" in links.columns else None
-        ctx_host = F.col("parent_host") if "parent_host" in links.columns else None
+        ctx_terms = F.col("parent_terms") if with_context else None
+        ctx_host = F.col("parent_host") if with_context else None
         parts = [
             (path_depth_score(href), 0.2),
             (content_type_score(href), 0.2),
@@ -438,15 +457,39 @@ class FrontierEngine:
                 ),
                 0.2,
             ))
-        scored = links.withColumn("score", composite_score(parts))
-        if cfg.link_preview_scoring and cfg.keywords:
-            # three-tier scoring (reference link_preview.py +
-            # calculate_total_score): head-peek the link target from the
-            # pages table, BM25-lite contextual score, 0.7/0.3 blend with
-            # the intrinsic score, normalized back to the frontier's 0..1
-            # priority scale. Missing targets fall back intrinsic-only.
-            from .headpeek import head_relevance_score, peek_head
-            from .linkpreview import total_score
+        score = composite_score(parts)
+        if not (cfg.link_preview_scoring and cfg.keywords):
+            return score, None
+        # three-tier scoring (reference link_preview.py +
+        # calculate_total_score): BM25-lite contextual score over the
+        # head-peeked target, 0.7/0.3 blend with the intrinsic score,
+        # normalized back to the frontier's 0..1 priority scale. Missing
+        # targets fall back intrinsic-only.
+        from .headpeek import head_relevance_score
+        from .linkpreview import total_score
+
+        contextual = F.when(
+            F.col("head_title").isNotNull(),
+            head_relevance_score(
+                F.col("head_title"), F.col("head_description"),
+                F.col("head_keywords"), list(cfg.keywords),
+            ),
+        )
+        intrinsic10 = link_intrinsic_score(
+            href, F.col("text"), F.col("title"), F.col("is_internal"),
+            ctx_terms, ctx_host,
+        )
+        return score, total_score(intrinsic10, contextual) / F.lit(10.0)
+
+    def _score_links(self, links: DataFrame,
+                     cols: tuple[Column, Column | None]) -> DataFrame:
+        """links: (href, text, title, base_domain, is_internal, link_pos,
+        parent_url, parent_depth [, parent_terms, parent_host]). ``cols``
+        is the run's prebuilt _link_score_cols."""
+        score, preview = cols
+        scored = links.withColumn("score", score)
+        if preview is not None:
+            from .headpeek import peek_head
 
             # peek ONLY the pages this wave actually links to: semi-join the
             # pages table down to the wave's distinct hrefs BEFORE the head
@@ -459,21 +502,11 @@ class FrontierEngine:
                 self.pages.select(F.col("url_canon").alias("href"), "html")
                 .join(wave_targets, "href", "semi")
             ).select("href", "head_title", "head_description", "head_keywords")
-            scored = scored.join(heads, "href", "left")
-            contextual = F.when(
-                F.col("head_title").isNotNull(),
-                head_relevance_score(
-                    F.col("head_title"), F.col("head_description"),
-                    F.col("head_keywords"), list(cfg.keywords),
-                ),
+            scored = (
+                scored.join(heads, "href", "left")
+                .withColumn("score", preview)
+                .drop("head_title", "head_description", "head_keywords")
             )
-            intrinsic10 = link_intrinsic_score(
-                href, F.col("text"), F.col("title"), F.col("is_internal"),
-                ctx_terms, ctx_host,
-            )
-            scored = scored.withColumn(
-                "score", total_score(intrinsic10, contextual) / F.lit(10.0)
-            ).drop("head_title", "head_description", "head_keywords")
         return scored
 
     def _link_filter_chain(self) -> FilterChain:
@@ -509,8 +542,7 @@ class FrontierEngine:
     def _materialize(self, df: DataFrame, name: str) -> DataFrame:
         """Write+read once (lineage truncation / materialized view)."""
         path = os.path.join(self.checkpoint_dir, "_state", name)
-        df.write.mode("overwrite").parquet(path)
-        return self.spark.read.parquet(path)
+        return _write_read(df, path)
 
     def run(self, seed_urls: list[str] | DataFrame,
             resume: bool = False) -> CrawlRun:
@@ -563,15 +595,6 @@ class FrontierEngine:
         # urls a union-distinct rewrite per wave would be the dominant cost
         # of the whole crawl. (Iceberg equivalent: append-only partitions.)
         seen_paths: list[str] = []
-
-        def _seen() -> DataFrame:
-            parts = [
-                spark.read.parquet(p).select("url_hash") for p in seen_paths
-            ]
-            out = parts[0]
-            for d in parts[1:]:
-                out = out.union(d)
-            return out
 
         start_wave = 0
         crawled = 0
@@ -639,6 +662,43 @@ class FrontierEngine:
                         trap_count_paths.append(tc)
 
         frontier_cols = [c.split(" ")[0] for c in FRONTIER_DDL.split(", ")]
+        # wave-invariant Columns, built once per run (each is a tree of
+        # py4j calls; only discovered_wave changes from wave to wave)
+        fetch_status = F.when(F.col("html").isNull(), 404).otherwise(
+            F.coalesce(F.col("_page_status"), F.lit(200))
+            if "_page_status" in self.pages.columns
+            else F.lit(200)
+        )
+        # parent-page context (extract_page_context parity) is computed ONCE
+        # per page before the explode, so every link row carries a
+        # precomputed term array — native exprs, no extra pass
+        parent_cols = []
+        if cfg.page_context_scoring:
+            headlines = F.concat_ws(
+                " ",
+                F.regexp_extract_all(
+                    F.coalesce("raw_markdown", F.lit("")),
+                    F.lit(r"(?m)^#{1,3} (.+)$"), F.lit(1),
+                ),
+            )
+            parent_cols = [
+                page_context_terms(
+                    F.col("title"), headlines,
+                    F.element_at("metadata", F.lit("description")),
+                ).alias("parent_terms"),
+                F.lower(
+                    F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)
+                ).alias("parent_host"),
+            ]
+        link_score_cols = self._link_score_cols(cfg.page_context_scoring)
+        link_filter = self._link_filter_chain().predicate()
+        # order_in_wave is a GLOBAL row_number: the admitted wave is one
+        # partition
+        admission_order = Window.orderBy(*self._admission_order())
+        # dedup within wave: deterministic winner
+        link_winner = Window.partitionBy("url_canon").orderBy(
+            F.desc("score"), F.asc("depth"), F.asc("parent_url"), F.asc("link_pos")
+        )
         wave = start_wave
         max_waves = cfg.max_waves or (1000 if cfg.strategy == "dfs" else 64)
         import threading
@@ -728,9 +788,8 @@ class FrontierEngine:
                 admitted = self._admit_wave(
                     adm_frontier, host_state, cfg.max_pages - crawled
                 )
-                order_w = Window.orderBy(*self._admission_order())
                 admitted = admitted.withColumn(
-                    "order_in_wave", F.row_number().over(order_w)
+                    "order_in_wave", F.row_number().over(admission_order)
                 ).withColumn("wave", F.lit(wave))
                 _mark("t_admission")
 
@@ -741,31 +800,30 @@ class FrontierEngine:
                 # by url_canon), so the old separate admitted.parquet write and
                 # the meta⋈extracted url join are both gone.
                 wave_dir = os.path.join(self.out_dir, f"wave={wave:05d}")
-                # fetch = pages ⋈ admitted with the ADMITTED side broadcast
-                # (guide §3.1: broadcast the side that fits). The natural
-                # admitted.join(pages, "left") builds the hash on PAGES —
-                # re-broadcasting the whole html payload every wave when the
-                # capture fits under the threshold, and an impossible plan at
-                # web scale. Right-outer + BuildLeft keeps the exact same
-                # rows (every admitted url once, html null on fetch miss)
-                # while the web-sized side only ever streams.
+                # fetch = pages ⋈ admitted as a right outer join: every
+                # admitted url once, html null on fetch miss. A right outer
+                # join can only build its hash on the left side, so the
+                # broadcast hint on admitted is not taken: Spark broadcasts
+                # the PAGES side while its size estimate is under
+                # autoBroadcastJoinThreshold and streams admitted; above it
+                # the join is sort-merge (ROADMAP item 4).
                 fetched = self.pages.join(
                     F.broadcast(admitted), "url_canon", "right"
                 )
-                status = F.when(F.col("html").isNull(), 404).otherwise(
-                    F.coalesce(F.col("_page_status"), F.lit(200))
-                    if "_page_status" in self.pages.columns
-                    else F.lit(200)
-                )
                 fetched = (
-                    fetched.withColumn("status_code", status)
+                    fetched.withColumn("status_code", fetch_status)
                     .withColumn("_do_extract", F.col("status_code") == 200)
                 )
                 # parallelism hint from the known frontier size: a 6-url wave
                 # runs 1 extraction task instead of 32 near-empty ones (task
                 # scheduling dominates small waves); big waves keep full width
                 # (during an overlapped commit the exact count is deferred;
-                # the previous wave's driver-side upper bound stands in)
+                # the previous wave's driver-side upper bound stands in).
+                # extract_pages_with_meta reads the fetch frame's width from
+                # its plan without running it: one partition while the pages
+                # side is broadcast (admission_order makes admitted one
+                # partition), the shuffle-partition count when the join is
+                # sort-merge.
                 size_hint = n_frontier if n_frontier >= 0 else next_frontier_upper
                 par_hint = None
                 if size_hint > 0:
@@ -786,9 +844,8 @@ class FrontierEngine:
                 results_path = os.path.join(wave_dir, "results.parquet")
                 spark.sparkContext.setJobDescription(
                     f"wave {wave}: admit+fetch+extract+write")
-                results.write.mode("overwrite").parquet(results_path)
+                results = _write_read(results, results_path)
                 spark.sparkContext.setJobDescription(None)
-                results = spark.read.parquet(results_path)
                 n_admitted = _parquet_rows(results_path, fallback=results)  # footer-only
                 # the overlapped snapshot commit has now been fully hidden behind
                 # the admission+extract job: join it and REBASE frontier /
@@ -830,28 +887,7 @@ class FrontierEngine:
                         os.path.join(wave_dir, "moments_payload.parquet"))
                 _mark("t_fetch_extract")
 
-                # ---- link discovery (hrefs already canonical from the kernel).
-                # Parent-page context (extract_page_context parity) is computed
-                # ONCE per page before the explode, so every link row carries a
-                # precomputed term array — native exprs, no extra pass.
-                parent_cols = []
-                if cfg.page_context_scoring:
-                    headlines = F.concat_ws(
-                        " ",
-                        F.regexp_extract_all(
-                            F.coalesce("raw_markdown", F.lit("")),
-                            F.lit(r"(?m)^#{1,3} (.+)$"), F.lit(1),
-                        ),
-                    )
-                    parent_cols = [
-                        page_context_terms(
-                            F.col("title"), headlines,
-                            F.element_at("metadata", F.lit("description")),
-                        ).alias("parent_terms"),
-                        F.lower(
-                            F.regexp_extract(F.col("url"), r"^https?://([^/]+)", 1)
-                        ).alias("parent_host"),
-                    ]
+                # ---- link discovery (hrefs already canonical from the kernel)
                 links = (
                     results.select(
                         F.col("url").alias("parent_url"),
@@ -872,7 +908,7 @@ class FrontierEngine:
                         F.col("link.is_internal").alias("is_internal"),
                     )
                 )
-                links = self._score_links(links)
+                links = self._score_links(links, link_score_cols)
                 cand = links.select(
                     F.col("href").alias("url_canon"),
                     F.xxhash64("href").alias("url_hash"),
@@ -885,14 +921,9 @@ class FrontierEngine:
                     F.lit(0).alias("retry_count"),
                     "is_internal",
                 )
-                chain = self._link_filter_chain()
-                cand = cand.where(chain.predicate())
-                # dedup within wave: deterministic winner
-                wdd = Window.partitionBy("url_canon").orderBy(
-                    F.desc("score"), F.asc("depth"), F.asc("parent_url"), F.asc("link_pos")
-                )
                 cand = (
-                    cand.withColumn("_rn", F.row_number().over(wdd))
+                    cand.where(link_filter)
+                    .withColumn("_rn", F.row_number().over(link_winner))
                     .where(F.col("_rn") == 1)
                     .drop("_rn", "is_internal")
                 )
@@ -917,9 +948,11 @@ class FrontierEngine:
                     cand = bloom.prefilter(cand)
                     maybe = cand.where(F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
                     fresh = cand.where(~F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
-                    new_links = fresh.unionByName(filter_unseen_exact(maybe, _seen()))
+                    new_links = fresh.unionByName(filter_unseen_exact(
+                        maybe, _seen_union(spark, seen_paths)))
                 else:
-                    new_links = filter_unseen_exact(cand, _seen())
+                    new_links = filter_unseen_exact(
+                        cand, _seen_union(spark, seen_paths))
                 # robots verdict computed HERE, once, as a stored column of
                 # the materialized delta: the lazy next_frontier plan is
                 # executed twice (async snapshot commit + the next wave's
@@ -937,9 +970,8 @@ class FrontierEngine:
                 new_links_path = os.path.join(wave_dir, "new_links.parquet")
                 spark.sparkContext.setJobDescription(
                     f"wave {wave}: link discovery (explode+score+dedup+antijoin)")
-                new_links.write.mode("overwrite").parquet(new_links_path)
+                new_links = _write_read(new_links, new_links_path)
                 spark.sparkContext.setJobDescription(None)
-                new_links = spark.read.parquet(new_links_path)
                 n_new = _parquet_rows(new_links_path, fallback=new_links)  # footer-only
 
                 # ---- next frontier + state folds, each written exactly once via
@@ -1049,7 +1081,8 @@ class FrontierEngine:
                     compact = os.path.join(
                         self.checkpoint_dir, "_state", f"seen_compact_{wave:05d}"
                     )
-                    _seen().write.mode("overwrite").parquet(compact)
+                    _seen_union(spark, seen_paths).write.mode(
+                        "overwrite").parquet(compact)
                     seen_paths = [compact]
                 next_host_state = fold_wave_outcomes(
                     host_state,
@@ -1127,9 +1160,12 @@ class FrontierEngine:
                     ),
                     kwargs={
                         # parquet-backed scan of the already-written delta —
-                        # safe to execute from the commit thread
+                        # safe to execute from the commit thread. A wave that
+                        # discovered nothing (every crawl's last) skips the
+                        # fold: the current state already covers seen.
                         "bloom_delta": (new_links.select("url_hash")
-                                        if bloom is not None else None),
+                                        if bloom is not None and n_new > 0
+                                        else None),
                         "meta": {
                             "pages_crawled": crawled,
                             "stats": _copy.deepcopy(stats),
@@ -1233,18 +1269,13 @@ class FrontierEngine:
             canonicalize_abs_udf(F.col("url")).alias("url_canon")
         ).withColumn("url_hash", F.xxhash64("url_canon")).select("url_hash")
         retire = self._materialize(retire, f"retire_{w0 + 1}")
-        seen_paths = list(meta.get("seen_deltas", []))
-        parts = [spark.read.parquet(p).select("url_hash") for p in seen_paths]
-        seen = parts[0] if parts else retire.limit(0)
-        for d in parts[1:]:
-            seen = seen.union(d)
+        seen = _seen_union(spark, list(meta.get("seen_deltas", [])))
         n_before = seen.count()
         kept = seen.join(retire, "url_hash", "left_anti")
         compact = os.path.join(
             self.checkpoint_dir, "_state", f"seen_retired_{w0 + 1:05d}"
         )
-        kept.write.mode("overwrite").parquet(compact)
-        kept = spark.read.parquet(compact)
+        kept = _write_read(kept, compact)
         n_removed = n_before - kept.count()
         meta["seen_deltas"] = [compact]
 
@@ -1292,6 +1323,10 @@ class FrontierEngine:
         page_cols = [F.col("url").alias("url_canon"), "html", "warc_ts", "lang"]
         if "status_code" in new_pages.columns:
             page_cols.append(F.col("status_code").alias("_page_status"))
+        # a NULL-url capture can never be fetched (the fetch joins on url)
+        # and would pass run()'s uniqueness probe as a one-row group: drop
+        # it at ingest so the probe and the latest-capture view agree
+        new_pages = new_pages.where(F.col("url").isNotNull())
         self._pages_input = new_pages
         self._page_cols = page_cols
         self.pages = latest_pages(new_pages).select(*page_cols)
@@ -1332,14 +1367,7 @@ class FrontierEngine:
             capture_fingerprint(new_latest, "url_canon", "html"),
         ).where(F.col("change").isin("changed", "gone"))
 
-        seen_paths = list(meta.get("seen_deltas", []))
-        parts = [spark.read.parquet(p).select("url_hash") for p in seen_paths]
-        if parts:
-            seen = parts[0]
-            for d in parts[1:]:
-                seen = seen.union(d)
-        else:
-            seen = spark.createDataFrame([], "url_hash long")
+        seen = _seen_union(spark, list(meta.get("seen_deltas", [])))
         cand = self._materialize(
             diff.withColumn(
                 "url_hash", F.xxhash64(canonicalize_abs_udf(F.col("url")))

@@ -186,14 +186,19 @@ class PartitionedBloom:
             .cogroup(self.state.groupBy("partition_id"))
             .applyInPandas(fold, BLOOM_STATE_SCHEMA)
         )
-        # materialize via parquet (alternating path: the fold READS the
-        # current state, so never overwrite the file being read)
+        self._swap_state(new_state)
+
+    def _swap_state(self, new_state: DataFrame) -> None:
+        """Materialize a folded state via parquet on an alternating path
+        (the fold READS the current state, so never overwrite the file
+        being read), read back with its known schema (a bare read.parquet
+        runs a Spark job to infer it)."""
         import os
 
         path = os.path.join(self.state_dir, f"bloom_{self._flip}")
         self._flip ^= 1
         new_state.write.mode("overwrite").parquet(path)
-        self.state = self.spark.read.parquet(path)
+        self.state = self.spark.read.schema(BLOOM_STATE_SCHEMA).parquet(path)
 
     def save(self, path: str) -> None:
         self.state.write.mode("overwrite").parquet(path)
@@ -203,7 +208,7 @@ class PartitionedBloom:
              capacity_per_partition: int = 1_000_000, fp_rate: float = 0.01
              ) -> "PartitionedBloom":
         pb = cls(spark, num_partitions, capacity_per_partition, fp_rate)
-        pb.state = spark.read.parquet(path)
+        pb.state = spark.read.schema(BLOOM_STATE_SCHEMA).parquet(path)
         return pb
 
 
@@ -247,9 +252,4 @@ class PartitionedCuckoo(PartitionedBloom):
             .cogroup(self.state.groupBy("partition_id"))
             .applyInPandas(fold, BLOOM_STATE_SCHEMA)
         )
-        import os
-
-        path = os.path.join(self.state_dir, f"bloom_{self._flip}")
-        self._flip ^= 1
-        new_state.write.mode("overwrite").parquet(path)
-        self.state = self.spark.read.parquet(path)
+        self._swap_state(new_state)

@@ -44,6 +44,7 @@ import shutil
 from abc import ABC, abstractmethod
 
 from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 
 class SnapshotBackend(ABC):
@@ -106,7 +107,11 @@ class ParquetManifestBackend(SnapshotBackend):
         written: list[str] = []
         with ThreadPoolExecutor(max_workers=max(1, len(todo))) as pool:
             written.extend(pool.map(_write, todo))
-        manifest = {"wave": wave, "tables": sorted(written), "meta": meta or {}}
+        # each table's schema rides in the manifest so read_snapshot scans
+        # with it instead of running a schema-inference job per table
+        manifest = {"wave": wave, "tables": sorted(written),
+                    "schemas": {n: df.schema.json() for n, df in todo},
+                    "meta": meta or {}}
         tmp = os.path.join(d, "_MANIFEST.json.tmp")
         with open(tmp, "w") as f:
             json.dump(manifest, f)
@@ -127,9 +132,15 @@ class ParquetManifestBackend(SnapshotBackend):
         d = self.wave_dir(wave)
         with open(os.path.join(d, "_MANIFEST.json")) as f:
             manifest = json.load(f)
+        # manifests written before "schemas" existed read by inference
+        schemas = manifest.get("schemas", {})
         out: dict[str, DataFrame] = {}
         for name in manifest["tables"]:
-            out[name] = self.spark.read.parquet(self.table_path(wave, name))
+            reader = self.spark.read
+            if name in schemas:
+                reader = reader.schema(
+                    StructType.fromJson(json.loads(schemas[name])))
+            out[name] = reader.parquet(self.table_path(wave, name))
         out["_meta"] = manifest.get("meta", {})  # type: ignore[assignment]
         return out
 

@@ -17,6 +17,29 @@ def spark():
     yield s
 
 
+@pytest.fixture()
+def jobs_started(spark):
+    """``jobs_started(fn)`` -> the number of Spark jobs ``fn()`` starts on
+    the calling thread (counted under a fresh job group, after the listener
+    bus has delivered every event)."""
+    import uuid
+
+    sc = spark.sparkContext
+
+    def count(fn) -> int:
+        gid = f"probe-{uuid.uuid4().hex}"
+        sc.setJobGroup(gid, "job probe")
+        try:
+            fn()
+        finally:
+            sc.setLocalProperty("spark.jobGroup.id", None)
+            sc.setLocalProperty("spark.job.description", None)
+        sc._jsc.sc().listenerBus().waitUntilEmpty()
+        return len(sc.statusTracker().getJobIdsForGroup(gid))
+
+    return count
+
+
 @pytest.fixture(scope="session")
 def site_dir(tmp_path_factory):
     """Small deterministic crawl site (pages/seeds/robots parquet)."""

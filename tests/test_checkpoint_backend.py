@@ -60,6 +60,38 @@ def test_snapshot_roundtrip(spark, tmp_path, tables, make_backend):
     assert os.path.exists(b.table_path(3, "frontier"))
 
 
+def test_snapshot_read_starts_no_spark_job(spark, tmp_path, tables,
+                                           jobs_started):
+    """Each table's schema rides in the manifest, so reading a snapshot
+    plans scans without a schema-inference job, and the schemas it reads
+    with are the ones inference would find."""
+    b = _parquet_backend(spark, tmp_path)
+    b.write_snapshot(0, tables)
+    got = {}
+    assert jobs_started(lambda: got.update(b.read_snapshot(0))) == 0
+    for name in ("frontier", "host_state", "stats"):
+        inferred = spark.read.parquet(b.table_path(0, name))
+        assert got[name].schema == inferred.schema
+        assert got[name].collect() == inferred.collect()
+
+
+def test_manifest_without_schemas_still_reads(spark, tmp_path, tables):
+    """Checkpoints written before manifests carried schemas resume: the
+    tables read back by inference."""
+    b = _parquet_backend(spark, tmp_path)
+    b.write_snapshot(0, tables, meta={"m": 1})
+    path = os.path.join(b.wave_dir(0), "_MANIFEST.json")
+    with open(path) as f:
+        man = json.load(f)
+    del man["schemas"]
+    with open(path, "w") as f:
+        json.dump(man, f)
+    got = b.read_snapshot(0)
+    assert got["_meta"] == {"m": 1}
+    assert got["frontier"].collect()[0]["url_canon"] == "http://a.com/"
+    assert got["stats"].collect()[0]["fetched"] == 2
+
+
 def test_checkpoint_store_delegates_and_keeps_layout(spark, tmp_path, tables):
     store = CheckpointStore(spark, str(tmp_path / "c"))
     store.write(0, tables, meta={"m": 1})

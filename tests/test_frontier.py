@@ -376,10 +376,10 @@ def test_context_and_authority_change_link_ranking(spark):
         return df
 
     eng = FrontierEngine(spark, pages, cfg=CrawlConfig())
-    plain = {r["href"]: r["score"]
-             for r in eng._score_links(links_df(False)).collect()}
-    ctx = {r["href"]: r["score"]
-           for r in eng._score_links(links_df(True)).collect()}
+    plain = {r["href"]: r["score"] for r in eng._score_links(
+        links_df(False), eng._link_score_cols(False)).collect()}
+    ctx = {r["href"]: r["score"] for r in eng._score_links(
+        links_df(True), eng._link_score_cols(True)).collect()}
     # without context the two links tie; with it the overlapping one wins
     assert plain["https://x.com/a.html"] == plain["https://x.com/b.html"]
     assert ctx["https://x.com/a.html"] > ctx["https://x.com/b.html"]
@@ -400,8 +400,8 @@ def test_context_and_authority_change_link_ranking(spark):
         spark, pages,
         cfg=CrawlConfig(domain_authority=(("high.com", 1.0), ("low.com", 0.0))),
     )
-    auth = {r["registrable_domain"]: r["score"]
-            for r in eng2._score_links(df).collect()}
+    auth = {r["registrable_domain"]: r["score"] for r in eng2._score_links(
+        df, eng2._link_score_cols(False)).collect()}
     assert auth["high.com"] > auth["low.com"]
 
 
@@ -643,3 +643,68 @@ def test_fairness_stats_per_wave(spark, pages_df, robots_df, tmp_path):
             assert s["host_gini"] == 0.0
         else:
             assert 0.0 <= s["host_gini"] < 1.0
+
+
+def test_materialize_reads_back_without_a_job(spark, pages_df, tmp_path,
+                                              jobs_started):
+    """_materialize scans its write back with the written schema: it starts
+    exactly the write's jobs, no schema-inference job on top."""
+    eng = FrontierEngine(spark, pages_df, cfg=CrawlConfig(),
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         out_dir=str(tmp_path / "out"))
+    df = spark.range(5).select(F.col("id").alias("url_hash"))
+    n_write = jobs_started(
+        lambda: df.write.mode("overwrite").parquet(str(tmp_path / "plain")))
+    got = []
+    assert jobs_started(
+        lambda: got.append(eng._materialize(df, "probe"))) == n_write
+    assert sorted(r["url_hash"] for r in got[0].collect()) == list(range(5))
+
+
+def test_run_builds_no_rdd_and_final_bloom_covers_seen(
+        spark, pages_df, robots_df, tmp_path, monkeypatch):
+    """A depth-1 crawl over the fixture plus one NULL-url capture:
+      - the NULL-url row is dropped at ingest (never a pages-view row);
+      - no DataFrame.rdd is built (it would run the wave plan's stages
+        once before the real job);
+      - the last wave discovers nothing, so its commit skips the bloom
+        fold (seed fold + wave-0 fold only), and the final snapshot's
+        bloom still covers every url in its seen set."""
+    from crawl4ai_custom_spark.operators.frontier import _seen_union
+    from crawl4ai_custom_spark.operators.seen import PartitionedBloom
+
+    pages = pages_df.unionByName(
+        pages_df.limit(1).withColumn("url", F.lit(None).cast("string")))
+    folds = []
+    add = PartitionedBloom.add
+
+    def counting_add(self, *args, **kwargs):
+        folds.append(1)
+        return add(self, *args, **kwargs)
+
+    def no_rdd(self):
+        raise AssertionError("DataFrame.rdd built during FrontierEngine.run")
+
+    monkeypatch.setattr(PartitionedBloom, "add", counting_add)
+    # the concrete (classic) DataFrame class, which defines its own .rdd
+    monkeypatch.setattr(type(pages_df), "rdd", property(no_rdd))
+    cfg = CrawlConfig(strategy="bfs", max_depth=1, max_pages=500,
+                      politeness=PolitenessConfig(wave_seconds=1e9),
+                      use_bloom=True, bloom_partitions=4)
+    eng = FrontierEngine(spark, pages, robots_df, cfg,
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         out_dir=str(tmp_path / "out"))
+    run = eng.run(SEEDS[:2])
+    monkeypatch.undo()
+
+    assert eng.pages.where(F.col("url_canon").isNull()).count() == 0
+    assert [s["new_links"] > 0 for s in run.stats] == [True, False]
+    assert len(folds) == 2
+    snap = eng.store.read(eng.store.latest_wave())
+    seen = _seen_union(spark, snap["_meta"]["seen_deltas"])
+    bloom = PartitionedBloom(spark, cfg.bloom_partitions, cfg.bloom_capacity,
+                             state_dir=str(tmp_path / "bloom"))
+    bloom.state = snap["bloom"]
+    flags = bloom.prefilter(seen).groupBy("bloom_maybe_seen").count().collect()
+    assert {r["bloom_maybe_seen"]: r["count"] for r in flags} == {
+        True: seen.count()}

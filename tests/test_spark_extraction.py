@@ -148,6 +148,37 @@ def test_extract_with_meta_skips_repartition_when_already_wide(spark):
     assert out.count() == 8 and out2.count() == 8
 
 
+def test_planned_partitions_reads_the_plan_without_a_job(spark, jobs_started):
+    """The width check reads a join/window plan's partition count from the
+    plan itself: the fetch-shaped right join over a global-window frame is
+    one partition while its left side is broadcast, and a sort-merge join
+    is shuffle-partitions wide. Reading either starts no Spark job (df.rdd
+    would run the plan's broadcast and shuffle stages). Scans declare no
+    count, so the caller falls back to df.rdd for them."""
+    from pyspark.sql import Window
+
+    from crawl4ai_custom_spark.operators.extraction import _planned_partitions
+
+    left = spark.range(40).select(F.col("id"), F.lit(b"<p>x</p>").alias("html"))
+    ranked = spark.range(40).select("id", (F.col("id") % 7).alias("k"))
+    ranked = ranked.withColumn("o", F.row_number().over(Window.orderBy("k")))
+    got = {}
+
+    def read():
+        got["broadcast"] = _planned_partitions(left.join(ranked, "id", "right"))
+        got["merge"] = _planned_partitions(
+            left.hint("merge").join(ranked, "id", "right"))
+        got["scan"] = _planned_partitions(
+            spark.createDataFrame([(1, b"x")], "id long, html binary"))
+
+    assert jobs_started(read) == 0
+    assert got == {
+        "broadcast": 1,
+        "merge": int(spark.conf.get("spark.sql.shuffle.partitions")),
+        "scan": None,
+    }
+
+
 def test_fields_pushdown_skips_unobserved_kernel_work(latest):
     """The fields pushdown must reach into the kernel (skip fit_html /
     markdown / content-filter work that no requested field observes) while

@@ -3209,7 +3209,6 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
     from collections.abc import Iterator
 
     import pandas as pd
-    from pyspark.sql.types import LongType, StructField, StructType
 
     docs = _t(spark, sf_dir, "documents")
     prefix = F.substring(
@@ -3231,75 +3230,29 @@ def q_pdf_extract(spark: SparkSession, sf_dir: str) -> DataFrame:
         prefix.alias("page2"),
     )
 
-    # one gate, both surfaces: the whole-doc text row (page_number 0) plus
-    # one row per page with metadata fanned on. ONE mapInPandas builds each
-    # payload once and runs every kernel parser on the in-memory bytes —
-    # the previous two-branch union (extract_pdf_text ∪ extract_pdf_pages)
-    # recomputed the build stage per branch and shipped every payload
-    # through Arrow twice; plan went 8 MapInPandas nodes -> 1, and the
-    # row set is byte-identical (same kernel calls, same inputs).
-    from pyspark.sql.types import IntegerType, StringType
-
-    schema = StructType([
-        StructField("media_id", LongType()),
-        StructField("page_number", IntegerType()),
-        StructField("page_text", StringType()),
-        StructField("n_images", IntegerType()),
-        StructField("meta_pages", IntegerType()),
-        StructField("title", StringType()),
-        StructField("producer", StringType()),
-        StructField("created", StringType()),
-        StructField("encrypted", StringType()),
-    ])
-    cols = [f.name for f in schema.fields]
+    # one gate, both surfaces: operators/pdf.pdf_rows emits the whole-doc
+    # text row (page_number 0) plus one row per page with metadata fanned
+    # on. ONE mapInPandas builds each payload once and parses it in memory
+    # — a build stage feeding extract_pdf would ship every payload through
+    # Arrow twice.
+    from crawl4ai_custom_spark.operators.pdf import PDF_SCHEMA, pdf_rows
 
     def build_and_parse(batches: Iterator[pd.DataFrame]) -> Iterator[pd.DataFrame]:
-        from crawl4ai_custom_spark.kernel.pdfmini import (
-            build_simple_pdf, pdf_metadata, pdf_page_count, pdf_pages,
-            pdf_text,
-        )
+        from crawl4ai_custom_spark.kernel.pdfmini import build_simple_pdf
 
         for pdf in batches:
-            # columnar accumulation: pd.DataFrame from dict-of-lists is
-            # several times cheaper than from 150k row dicts
-            col = {c: [] for c in cols}
-            for mid, p1, p2 in zip(pdf["media_id"], pdf["page1"],
-                                   pdf["page2"]):
-                payload = build_simple_pdf(
+            yield pdf_rows(
+                (mid, build_simple_pdf(
                     [p1, p2],
                     info={"title": p1, "producer": "pdfmini",
                           "created": "D:20260115093000"},
                     images_per_page=int(mid) % 3,
-                )
-                # extract_pdf_text twin: whole-doc row, page_number 0
-                col["media_id"].append(mid)
-                col["page_number"].append(0)
-                col["page_text"].append(pdf_text(payload))
-                col["n_images"].append(-1)
-                col["meta_pages"].append(pdf_page_count(payload))
-                col["title"].append(None)
-                col["producer"].append(None)
-                col["created"].append(None)
-                col["encrypted"].append(None)
-                # extract_pdf_pages twin: per-page rows + /Info metadata
-                meta = pdf_metadata(payload)
-                pages = pdf_pages(payload) or [
-                    {"page_number": 0, "text": "", "n_images": 0}
-                ]
-                enc = "true" if meta["encrypted"] else "false"
-                for pg in pages:
-                    col["media_id"].append(mid)
-                    col["page_number"].append(pg["page_number"])
-                    col["page_text"].append(pg["text"])
-                    col["n_images"].append(pg["n_images"])
-                    col["meta_pages"].append(meta["pages"])
-                    col["title"].append(meta["title"])
-                    col["producer"].append(meta["producer"])
-                    col["created"].append(meta["created"])
-                    col["encrypted"].append(enc)
-            yield pd.DataFrame(col, columns=cols)
+                ))
+                for mid, p1, p2 in zip(pdf["media_id"], pdf["page1"],
+                                       pdf["page2"])
+            )
 
-    return src.mapInPandas(build_and_parse, schema)
+    return src.mapInPandas(build_and_parse, PDF_SCHEMA)
 
 
 def q_queue_wait_stats(spark: SparkSession, sf_dir: str) -> DataFrame:

@@ -6,10 +6,9 @@ Reference parity: the hub crawlers
 wrappers that pair a target site with JsonCss extraction schemas. The
 reference *generates* the SERP schemas with an LLM on first run and caches
 them as JSON; here the cached artifacts are deterministic presets (the
-LLM-generation step is the same out-of-scope model seam as
-operators/llm_boundary.py — ``generate_schema`` below is its stub
-boundary), and extraction runs as one ``schema_extract`` stage per schema
-family over the pages DataFrame.
+LLM-generation step is an out-of-scope external model call), and
+extraction runs as one ``schema_extract`` stage per schema family over the
+pages DataFrame.
 """
 
 from __future__ import annotations
@@ -71,17 +70,6 @@ def serp_schemas() -> dict[str, dict]:
         "top_stories_schema": SERP_TOP_STORIES_SCHEMA,
         "suggested_query_schema": SERP_SUGGESTED_SCHEMA,
     }
-
-
-def generate_schema(html: str, target_json_example: str, query: str) -> dict:
-    """LLM schema generation seam (JsonCssExtractionStrategy.generate_schema
-    in the reference). The model call is out of scope by design — callers
-    get the deterministic preset cache via serp_schemas(); a deployment
-    wires a real LLMClient here (see operators/llm_boundary.py)."""
-    raise NotImplementedError(
-        "schema generation requires an external LLM; use the preset "
-        "schemas (serp_schemas()) or wire an LLMClient"
-    )
 
 
 def serp_extract(pages: DataFrame, url_col: str = "url",

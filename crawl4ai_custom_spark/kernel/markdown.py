@@ -614,14 +614,6 @@ def convert_links_to_citations(markdown: str,
     return cited, "".join(lines)
 
 
-def references_block(refs: list[tuple[str, str]]) -> str:
-    """Legacy shim over the reference-format references list."""
-    if not refs:
-        return ""
-    return "".join([f"⟨{i}⟩ {href}{(': ' + title) if title else ''}\n"
-                    for i, (href, title) in enumerate(refs, 1)])
-
-
 def generate_markdown(html: str | Node, fit_html: str | None = None,
                       base_url: str = "") -> MarkdownResult:
     """Full markdown bundle for one page's cleaned HTML: ONE conversion

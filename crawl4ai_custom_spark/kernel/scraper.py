@@ -365,19 +365,6 @@ def rewrite_urls(root: Node, url: str, base_href: str | None = None) -> None:
                 el.attrs["src"] = canon(v) or v
 
 
-def remove_comments(root: Node) -> None:
-    for n in [root] + root.iter():
-        n.children = [c for c in n.children if not isinstance(c, Comment)]
-
-
-def remove_tags(root: Node, tags: frozenset[str]) -> None:
-    if not tags:
-        return
-    for n in root.iter():
-        if n.tag in tags:
-            n.detach()
-
-
 def cleanup_tree(
     root: Node,
     remove: frozenset[str],
@@ -417,40 +404,6 @@ def cleanup_tree(
         or (k == "class" and root.tag == "code" and v.startswith("language-"))
     }
     return words
-
-
-def remove_empty_elements(root: Node, min_words: int = 1) -> None:
-    """Bottom-up removal of elements with fewer than min_words words and no
-    media/table descendants (reference: remove_empty_elements_fast,
-    content_scraping_strategy.py:517-554)."""
-
-    def walk(n: Node) -> bool:
-        """Returns True if node should be kept."""
-        n.children = [
-            c
-            for c in n.children
-            if not isinstance(c, Node) or walk(c)
-        ]
-        if n.tag in _MEDIA_KEEP or n.tag in ("br", "hr"):
-            return True
-        if any(isinstance(c, Node) for c in n.children):
-            return True
-        text = n.text()
-        return len(text.split()) >= min_words
-
-    walk(root)
-
-
-def strip_attributes(root: Node, keep_data: bool = False) -> None:
-    for n in root.iter():
-        n.attrs = {
-            k: v
-            for k, v in n.attrs.items()
-            if k in IMPORTANT_ATTRS
-            or (keep_data and k.startswith("data-"))
-            # language hint survives for fenced code blocks in markdown
-            or (k == "class" and n.tag == "code" and v.startswith("language-"))
-        }
 
 
 # --------------------------------------------------------------------------

@@ -1,95 +1,11 @@
-"""Tokenization, stopwords, light stemming, BM25 — pure Python.
-
-Used by content filters (BM25ContentFilter semantics, cf.
-/root/reference/crawl4ai/content_filter_strategy.py:381-530), the adaptive
-crawler's term statistics, relevance filters, and the text-analysis operator
-family (language ID, quality scoring, token counting, fingerprinting).
-
-Everything here is deterministic and dependency-free so the same logic can
-run inside executors (pandas UDF closures) and in pytest without Spark.
+"""Stable hashing shared by the kernel, Spark and the SQL oracle — pure
+Python, dependency-free, so the same value comes out of executors, the
+data generator and pytest without Spark.
 """
 
 from __future__ import annotations
 
 import hashlib
-import math
-import re
-from collections import Counter
-
-_TOKEN_RE = re.compile(r"[a-z0-9]+")
-
-STOPWORDS = frozenset(
-    """a an and are as at be by for from has he in is it its of on that the to
-    was were will with this these those i you your we they them his her she or
-    but not no if then than so too very can could would should do does did have
-    had been being there here when where which who whom what why how all any
-    both each few more most other some such only own same s t don just now""".split()
-)
-
-
-def tokenize(text: str) -> list[str]:
-    """Lowercase alnum tokens."""
-    return _TOKEN_RE.findall(text.lower()) if text else []
-
-
-def stem(token: str) -> str:
-    """Deterministic suffix-stripping stemmer (Porter-lite, from scratch)."""
-    for suf in ("ational", "iveness", "fulness", "ousness"):
-        if token.endswith(suf) and len(token) > len(suf) + 2:
-            return token[: -len(suf) + 3] if suf == "ational" else token[: -len(suf)]
-    for suf in ("ing", "edly", "ed", "ies", "ly", "es", "s"):
-        if token.endswith(suf) and len(token) > len(suf) + 2:
-            t = token[: -len(suf)]
-            if suf == "ies":
-                t += "y"
-            return t
-    return token
-
-
-def clean_tokens(text: str, *, do_stem: bool = True) -> list[str]:
-    toks = [t for t in tokenize(text) if t not in STOPWORDS and len(t) > 1]
-    return [stem(t) for t in toks] if do_stem else toks
-
-
-class BM25:
-    """Okapi BM25 over a small in-memory corpus (per-page chunk corpora).
-
-    Matches the classic formula: idf(q) * tf*(k1+1) / (tf + k1*(1-b+b*dl/avgdl))
-    with idf(q) = ln((N - df + 0.5)/(df + 0.5) + 1).
-    """
-
-    def __init__(self, corpus: list[list[str]], k1: float = 1.5, b: float = 0.75):
-        self.k1, self.b = k1, b
-        self.n = len(corpus)
-        self.doc_lens = [len(d) for d in corpus]
-        self.avgdl = (sum(self.doc_lens) / self.n) if self.n else 0.0
-        self.tfs = [Counter(d) for d in corpus]
-        df: Counter = Counter()
-        for tf in self.tfs:
-            df.update(tf.keys())
-        self.idf = {
-            t: math.log((self.n - d + 0.5) / (d + 0.5) + 1.0) for t, d in df.items()
-        }
-
-    def score(self, query: list[str], idx: int) -> float:
-        tf, dl = self.tfs[idx], self.doc_lens[idx]
-        if dl == 0 or self.avgdl == 0:
-            return 0.0
-        s = 0.0
-        for q in query:
-            f = tf.get(q, 0)
-            if not f:
-                continue
-            s += (
-                self.idf.get(q, 0.0)
-                * f
-                * (self.k1 + 1.0)
-                / (f + self.k1 * (1.0 - self.b + self.b * dl / self.avgdl))
-            )
-        return s
-
-    def scores(self, query: list[str]) -> list[float]:
-        return [self.score(query, i) for i in range(self.n)]
 
 
 def stable_hash64(s: str) -> int:
@@ -98,17 +14,3 @@ def stable_hash64(s: str) -> int:
     (``conv(substr(md5(x),1,15),16,10)``) and DuckDB
     (``('0x'||substr(md5(x),1,15))::BIGINT``)."""
     return int(hashlib.md5(s.encode("utf-8")).hexdigest()[:15], 16)
-
-
-def char_ngrams(text: str, n: int = 3) -> list[str]:
-    t = re.sub(r"\s+", " ", text.lower()).strip()
-    if len(t) < n:
-        return [t] if t else []
-    return [t[i : i + n] for i in range(len(t) - n + 1)]
-
-
-def word_shingles(text: str, k: int = 3) -> list[str]:
-    toks = tokenize(text)
-    if len(toks) < k:
-        return [" ".join(toks)] if toks else []
-    return [" ".join(toks[i : i + k]) for i in range(len(toks) - k + 1)]

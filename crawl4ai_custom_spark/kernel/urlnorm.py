@@ -181,45 +181,3 @@ def is_external_url(url: str, base_url: str) -> bool:
     if not d1 or not d2:
         return False
     return d1 != d2
-
-
-def url_depth(url: str) -> int:
-    """Number of non-empty path segments (PathDepthScorer input)."""
-    try:
-        path = urlsplit(url).path
-    except ValueError:
-        return 0
-    return sum(1 for seg in path.split("/") if seg)
-
-
-def efficient_canonicalize_url(
-    href: str | None,
-    base_url: str | None = None,
-    preserve_https: bool = False,
-    original_scheme: str | None = None,
-) -> str | None:
-    """The reference's lighter fast-path normalization
-    (efficient_normalize_url_for_deep_crawl, utils.py:2383-2419): resolve
-    against base, optionally re-upgrade same-host http->https, lowercase the
-    netloc, drop the fragment, strip trailing slashes — nothing else (no
-    tracking-param removal, no default-port cleanup). Use canonicalize_url
-    for the frontier key; this exists for API/behavior parity where callers
-    opted into the cheap variant."""
-    if not href:
-        return None
-    href = href.strip()
-    full = urljoin(base_url, href) if base_url else href
-    try:
-        scheme, netloc, path, query, _frag = urlsplit(full)
-    except ValueError:
-        return None
-    if (
-        preserve_https and original_scheme == "https" and scheme == "http"
-        and base_url and not href.startswith("//")
-    ):
-        try:
-            if urlsplit(base_url).netloc == netloc:
-                scheme = "https"
-        except ValueError:
-            pass
-    return urlunsplit((scheme, netloc.lower(), path.rstrip("/"), query, ""))

@@ -7,13 +7,13 @@ workflow over a product table with persisted state:
 
   1. discover   seed queries -> candidate records via an external catalog
                 API (SaaSHub in the reference) — the API call is an
-                out-of-scope service seam here, like operators/llm_boundary
+                out-of-scope external service here
   2. resolve    candidate catalog pages -> canonical homepage urls
                 (url_discovery.discover_homepage_single) — re-expressed as
                 a fetch-join against the pages table + link extraction
   3. extract    homepages -> structured product records
                 (LLMExtractionStrategy in the reference; the deterministic
-                schema engine here, with the LLM seam available)
+                schema engine here)
 
 State parity: the reference persists CollectionState JSON and skips
 completed seeds/products on rerun (collect.py:135-148,175-181). Here each

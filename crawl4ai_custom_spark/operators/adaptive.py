@@ -2,22 +2,18 @@
 
 Reference parity: AdaptiveCrawler (/root/reference/crawl4ai/adaptive_crawler.py)
 — crawl until "confident": coverage (query-term coverage with log-frequency
-boost), consistency (mean pairwise Jaccard of document term sets),
-saturation (1 - recent new-term rate), confidence = 0.4/0.3/0.3 blend; link
-ranking by relevance/novelty/authority.
+boost), consistency, saturation (1 - recent new-term rate), confidence =
+0.4/0.3/0.3 blend; link ranking by relevance/novelty/authority.
 
 Spark re-expression: term statistics are aggregations over the exploded
-token table; pairwise Jaccard uses the same shingle-join pattern as dedup
-(MinHash substitutes at scale); everything returns plain floats so the
-driver loop (frontier engine) can decide to stop.
+token table; everything returns plain floats so the driver loop
+(adaptive_session) can decide to stop.
 """
 
 from __future__ import annotations
 
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
-
-from .dedup import ngram_jaccard_dedup
 
 
 def term_stats(docs: DataFrame, id_col: str = "doc_id", text_col: str = "text"
@@ -53,16 +49,6 @@ def coverage_score(stats: DataFrame, query_terms: list[str], n_docs: int) -> flo
         for t in qt
     ]
     return float(sum(per_term) / len(per_term))
-
-
-def consistency_score(docs: DataFrame, id_col: str = "doc_id",
-                      text_col: str = "text", sample: int = 50) -> float:
-    """Mean pairwise 1-gram Jaccard over a deterministic id-ordered sample
-    (exact self-join; MinHash replaces it beyond fixture scale)."""
-    sub = docs.orderBy(F.asc(id_col)).limit(sample)
-    pairs = ngram_jaccard_dedup(sub, id_col, text_col, k=1, threshold=-1.0)
-    row = pairs.agg(F.avg("jaccard")).collect()[0][0]
-    return float(row or 0.0)
 
 
 def saturation_score(new_terms_history: list[int]) -> float:

@@ -53,8 +53,8 @@ def adaptive_crawl(
 
     Consistency here uses the cheap proxy the reference's blend tolerates at
     wave granularity: the fraction of crawled pages containing >=1 query
-    term (pairwise Jaccard / MinHash is available in operators/adaptive.py
-    for offline analysis but is overkill per wave)."""
+    term (pairwise Jaccard — dedup.ngram_jaccard_dedup — is overkill per
+    wave)."""
     import os
 
     spark = engine.spark
@@ -173,7 +173,7 @@ def embedding_adaptive_crawl(
 
     query_embeddings: (query_id, embedding array<double>) — the query plus
         its variations, PRECOMPUTED (the text->vector model call is the
-        out-of-scope seam, like operators/llm_boundary.py). The last
+        out-of-scope external model call). The last
         ceil(20%) of query_id order is held out for validation, mirroring
         the reference's train/val split (:760-781).
     embed_results: callable (results DataFrame) -> (doc_id, embedding) —

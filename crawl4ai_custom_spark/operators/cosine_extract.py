@@ -248,87 +248,3 @@ def cosine_cluster_extract(
         )
 
     return pre.groupBy("id").applyInPandas(fn, CLUSTER_SCHEMA)
-
-
-def cosine_cluster_extract_dataflow(
-    chunks: DataFrame,
-    query_vec: list[float] | None = None,
-    sim_threshold: float = 0.3,
-    max_dist: float = 0.2,
-    word_count_threshold: int = 10,
-    at_least_k: int = 20,
-    id_col: str = "id",
-    index_col: str = "chunk_index",
-    text_col: str = "chunk",
-    vec_col: str = "embedding",
-    checkpoint_dir: str | None = None,
-) -> DataFrame:
-    """Scale-out variant for documents too wide for local clustering:
-    cosine-threshold self-join pairs -> connected components
-    (``dedup.cluster_pairs``), i.e. single-linkage at ``max_dist`` instead
-    of ward. On well-separated clusters the two agree; on chained shapes
-    single-linkage merges more aggressively (documented divergence — this is
-    the 10^5-chunks-per-doc escape hatch, not the parity path)."""
-    from .dedup import cluster_pairs
-
-    pre = semantic_prefilter(
-        chunks, query_vec, sim_threshold, at_least_k, id_col, index_col, vec_col
-    ).select(
-        F.col(id_col).cast("long").alias("id"),
-        "sel_pos",
-        F.col(text_col).alias("chunk"),
-        F.col(vec_col).alias("embedding"),
-    )
-    # composite node key: documents never share clusters
-    nodes = pre.withColumn("node", F.col("id") * 1_000_000 + F.col("sel_pos"))
-    a = nodes.select(
-        F.col("id").alias("id_d"), F.col("node").alias("id_a"),
-        F.col("embedding").alias("va"),
-    )
-    b = nodes.select(
-        F.col("id").alias("id_d"), F.col("node").alias("id_b"),
-        F.col("embedding").alias("vb"),
-    )
-    pairs = (
-        a.join(b, "id_d")
-        .where(F.col("id_a") < F.col("id_b"))
-        .where((1.0 - cosine(F.col("va"), F.col("vb"))) <= max_dist)
-        .select("id_a", "id_b")
-    )
-    comp = cluster_pairs(pairs, checkpoint_dir=checkpoint_dir)
-    # nodes in no pair are their own singleton cluster
-    labeled = nodes.join(
-        comp.withColumnRenamed("id", "node"), "node", "left"
-    ).withColumn("cluster_id", F.coalesce("cluster_id", F.col("node")))
-    first_pos = F.min("sel_pos").over(Window.partitionBy("id", "cluster_id"))
-    agg = (
-        labeled.withColumn("first_pos", first_pos)
-        .groupBy("id", "cluster_id", "first_pos")
-        .agg(
-            F.array_sort(
-                F.collect_list(F.struct("sel_pos", "chunk"))
-            ).alias("ordered"),
-        )
-        .select(
-            "id",
-            "first_pos",
-            F.concat_ws(
-                " ", F.transform("ordered", lambda s: s["chunk"])
-            ).alias("content"),
-            F.size("ordered").alias("n_chunks"),
-        )
-    )
-    w_doc = Window.partitionBy("id").orderBy("first_pos")
-    return (
-        agg.withColumn("cluster_index", F.row_number().over(w_doc))
-        # python str.split() semantics: any-whitespace, no empties
-        .withColumn(
-            "n_words",
-            F.size(F.split(F.trim(F.col("content")), r"\s+")),
-        )
-        .where(F.col("n_words") >= word_count_threshold)
-        .select(
-            F.col("id").cast("int").alias("id"),
-            "cluster_index", "content", "n_chunks", "n_words",
-        )
-    )

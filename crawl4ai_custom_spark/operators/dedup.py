@@ -140,9 +140,8 @@ def save_band_index_bucketed(bands_df: DataFrame, table: str,
                              path: str | None = None) -> None:
     """Append (id, band_hash) rows to a band-index table **bucketed by
     band_hash** — the storage layout that makes the incremental-dedup
-    probe exchange-free on the store side (mirrors
-    ``seen.save_seen_bucketed``; on Iceberg this is ``bucket(N,
-    band_hash)`` partitioning + storage-partitioned joins).
+    probe exchange-free on the store side (on Iceberg this is
+    ``bucket(N, band_hash)`` partitioning + storage-partitioned joins).
 
     Append-only and retry-tolerant BY CONSTRUCTION rather than by
     transactional commit: a replayed epoch may append duplicate band rows,
@@ -930,14 +929,22 @@ def winnow_matches(fingerprints: DataFrame,
     of the gram count per doc), never the texts. Returns (id_a, id_b,
     n_shared). Fingerprint tables under the limit-probe run the
     pair count locally (integer set intersections — bit-identical)."""
-    probe_max = 100_000
+    probe_max, doc_max = 100_000, 512
     rows = fingerprints.select("id", "fp_hash").limit(probe_max + 1).collect()
+    # the local pair loop is O(docs^2): bound BOTH rows and docs, and stop
+    # building the per-doc sets as soon as a doc past the bound appears
+    local = 0 < len(rows) <= probe_max
     by_id: dict = {}
-    if len(rows) <= probe_max:
+    if local:
         for i, h in rows:
-            by_id.setdefault(i, set()).add(h)
-    # the local pair loop is O(docs^2): bound BOTH rows and docs
-    if rows and len(rows) <= probe_max and len(by_id) <= 512:
+            fps = by_id.get(i)
+            if fps is None:
+                if len(by_id) == doc_max:
+                    local = False
+                    break
+                fps = by_id[i] = set()
+            fps.add(h)
+    if local:
         from ..session import local_df
 
         idt = fingerprints.select(

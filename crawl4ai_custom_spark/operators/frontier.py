@@ -154,12 +154,7 @@ class CrawlConfig:
     politeness: PolitenessConfig = field(default_factory=PolitenessConfig)
     extract: ExtractConfig = field(default_factory=ExtractConfig)
     use_bloom: bool = True
-    # "bloom" (default: smallest blobs) or "cuckoo" (supports seen-set
-    # retirement via PartitionedCuckoo.remove for re-crawl scheduling);
-    # both honor the same no-false-negative prefilter contract
-    seen_filter: str = "bloom"
     bloom_partitions: int = 8
-    bloom_capacity: int = 1_000_000
     # the cogrouped prefilter stage only pays once the seen set is big;
     # below this row count the exact anti-join runs alone (the bloom is
     # still maintained so engagement later is seamless)
@@ -544,21 +539,17 @@ class FrontierEngine:
         path = os.path.join(self.checkpoint_dir, "_state", name)
         return _write_read(df, path)
 
+    def _new_bloom(self) -> PartitionedBloom:
+        return PartitionedBloom(
+            self.spark, self.cfg.bloom_partitions,
+            state_dir=os.path.join(self.checkpoint_dir, "_state", "bloom"),
+        )
+
     def run(self, seed_urls: list[str] | DataFrame,
             resume: bool = False) -> CrawlRun:
         spark, cfg = self.spark, self.cfg
         stats: list[dict[str, Any]] = []
-        if cfg.use_bloom:
-            if cfg.seen_filter == "cuckoo":
-                from .seen import PartitionedCuckoo as _filter_cls
-            else:
-                _filter_cls = PartitionedBloom
-            bloom: PartitionedBloom | None = _filter_cls(
-                spark, cfg.bloom_partitions, cfg.bloom_capacity,
-                state_dir=os.path.join(self.checkpoint_dir, "_state", "bloom"),
-            )
-        else:
-            bloom = None
+        bloom = self._new_bloom() if cfg.use_bloom else None
 
         # materialize the latest-capture "web" once: every wave's fetch join
         # scans this parquet with pushdown instead of re-running the window
@@ -1217,10 +1208,10 @@ class FrontierEngine:
     #   retire_seen(urls) forget the urls were ever discovered: they leave
     #                     the exact seen set AND the prefilter, so organic
     #                     link rediscovery re-queues them naturally later.
-    #                     With seen_filter="cuckoo" the prefilter update is
-    #                     an O(retired) deletion fold; with bloom (no
-    #                     deletes) the blobs are REBUILT from the compacted
-    #                     seen set — the measured cost of choosing bloom.
+    #                     Bloom has no deletes, so the blobs are REBUILT
+    #                     from the compacted seen set — retire_seen already
+    #                     rewrites that whole set, so the rebuild adds no
+    #                     higher-order cost.
     #
     # Feed either from `recrawl.revisit_priority` output (its top rows are
     # the urls whose smoothed change rate says "look again").
@@ -1281,25 +1272,9 @@ class FrontierEngine:
 
         filter_state = snap.get("bloom")
         if self.cfg.use_bloom and filter_state is not None:
-            if self.cfg.seen_filter == "cuckoo":
-                from .seen import PartitionedCuckoo
-
-                pc = PartitionedCuckoo(
-                    spark, self.cfg.bloom_partitions, self.cfg.bloom_capacity,
-                    state_dir=os.path.join(
-                        self.checkpoint_dir, "_state", "bloom"),
-                )
-                pc.state = filter_state
-                pc.remove(retire)          # O(retired) deletion fold
-                filter_state = pc.state
-            else:
-                pb = PartitionedBloom(
-                    spark, self.cfg.bloom_partitions, self.cfg.bloom_capacity,
-                    state_dir=os.path.join(
-                        self.checkpoint_dir, "_state", "bloom"),
-                )
-                pb.add(kept)               # bloom: full rebuild from kept
-                filter_state = pb.state
+            pb = self._new_bloom()
+            pb.add(kept)                   # full rebuild from kept
+            filter_state = pb.state
         self.store.write(
             w0 + 1,
             {"frontier": snap["frontier"], "host_state": snap["host_state"],
@@ -1346,7 +1321,7 @@ class FrontierEngine:
             (link rediscovery cannot double-queue them) and re-enter the
             frontier, re-admitted through politeness/budget as usual;
           * GONE crawled urls are retired from the exact seen set AND the
-            prefilter (cuckoo: O(retired) deletion fold) — organic link
+            prefilter (bloom rebuilt from the kept set) — organic link
             rediscovery re-queues them and the fetch records the miss;
           * NEW urls need nothing: they were never seen, so normal link
             discovery admits them.

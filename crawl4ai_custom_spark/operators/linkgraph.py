@@ -51,6 +51,14 @@ def _collect_small_edges(edges: DataFrame):
     return rows if len(rows) <= _DRIVER_MAX_EDGES else None
 
 
+def _collect_small_seeds(seeds: DataFrame):
+    """The distinct ids of a seed table's first column under the same
+    driver gate, else None (the caller then runs distributed)."""
+    rows = (seeds.select(seeds.columns[0]).distinct()
+            .limit(_DRIVER_MAX_EDGES + 1).collect())
+    return {r[0] for r in rows} if len(rows) <= _DRIVER_MAX_EDGES else None
+
+
 def _local_power_iteration(edge_rows, teleport: dict, init: dict,
                            iterations: int, damping: float,
                            base_from_teleport: bool):
@@ -157,13 +165,13 @@ def trustrank(edges: DataFrame, seeds: DataFrame, iterations: int = 3,
     spark = edges.sparkSession
     if checkpoint_dir is None:
         rows = _collect_small_edges(edges)
-        if rows is not None:
+        seed_ids = _collect_small_seeds(seeds) if rows is not None else None
+        if seed_ids is not None:
             from ..session import local_df
 
             idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
             node_set = {s for s, _ in rows} | {d for _, d in rows}
-            seed_set = {r[0] for r in seeds.select(seeds.columns[0])
-                        .distinct().collect()} & node_set
+            seed_set = seed_ids & node_set
             if not seed_set:
                 return local_df(
                     spark, [(x, 0.0) for x in sorted(node_set)],
@@ -658,7 +666,9 @@ def spam_mass(edges: DataFrame, good_seeds: DataFrame,
     spark = edges.sparkSession
     if checkpoint_dir is None:
         rows = _collect_small_edges(edges)
-        if rows is not None:
+        seed_ids = (_collect_small_seeds(good_seeds) if rows is not None
+                    else None)
+        if seed_ids is not None:
             from ..session import local_df
 
             idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
@@ -668,8 +678,7 @@ def spam_mass(edges: DataFrame, good_seeds: DataFrame,
                     spark, [], f"node {idt}, pagerank double, "
                     "core_rank double, spam_mass double")
             n = len(node_set)
-            seed_set = {r[0] for r in good_seeds.select(good_seeds.columns[0])
-                        .distinct().collect()} & node_set
+            seed_set = seed_ids & node_set
             n_seed = len(seed_set)
             base = (1.0 - damping) / n
             pr = _local_power_iteration(

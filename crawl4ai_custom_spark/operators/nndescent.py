@@ -367,8 +367,9 @@ def graph_ann_search(
     on id order; the same repair HNSW's upper layers / NSW's long links
     provide. When given, ``n_entry`` is ignored.
 
-    Small inputs (corpus fits ``driver_max_vectors``, default 256, and the
-    graph collects under the matching edge bound) run a bit-identical
+    Small inputs (corpus, queries and any given entry points each fit
+    ``driver_max_vectors``, default 256, and the graph collects under the
+    matching edge bound) run a bit-identical
     driver twin of the synchronized beam loop instead of
     rounds x (union+distinct+2 joins+window+localCheckpoint) Spark jobs —
     the cluster_pairs small-input convention; the distributed path is
@@ -380,17 +381,25 @@ def graph_ann_search(
     if len(crows) <= driver_max_vectors:
         gmax = driver_max_vectors * max(k, 16)
         grows = graph.select("id", "nbr").limit(gmax + 1).collect()
+        # queries and given entry points share the corpus bound: past it
+        # they stay uncollected and the search runs distributed
+        qrows = erows = []
         if len(grows) <= gmax:
-            from ..session import local_df
-
             qrows = queries.select(
                 F.col(id_col), F.col(vec_col).cast("array<double>")
-            ).collect()
+            ).limit(driver_max_vectors + 1).collect()
+            if entry_points is not None:
+                erows = entry_points.select("node").limit(
+                    driver_max_vectors + 1).collect()
+        if (len(grows) <= gmax and len(qrows) <= driver_max_vectors
+                and len(erows) <= driver_max_vectors):
+            from ..session import local_df
+
             if entry_points is None:
                 ids_sorted = sorted(r[0] for r in crows)
                 entries = ids_sorted[:n_entry]
             else:
-                entries = [r[0] for r in entry_points.select("node").collect()]
+                entries = [r[0] for r in erows]
             vecs = {r[0]: list(r[1]) for r in crows}
             qvecs = {r[0]: list(r[1]) for r in qrows}
             out = _local_graph_ann(vecs, grows, qvecs, entries,

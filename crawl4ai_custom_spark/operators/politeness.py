@@ -158,15 +158,6 @@ def fold_wave_outcomes(
     )
 
 
-def aged_priority(priority: F.Column, wait_waves: F.Column,
-                  fairness_waves: int = 20) -> F.Column:
-    """Starvation aging (dispatcher parity, async_dispatcher.py:470-527):
-    rows waiting beyond the fairness horizon jump the queue (lower = first)."""
-    return F.when(wait_waves > fairness_waves, -wait_waves.cast("double")).otherwise(
-        priority
-    )
-
-
 def aged_score(score: F.Column, wait_waves: F.Column,
                fairness_waves: int) -> F.Column:
     """The same aging in the frontier's score-DESC admission order: a row

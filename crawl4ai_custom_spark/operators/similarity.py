@@ -26,11 +26,6 @@ from pyspark.sql import functions as F
 from ..session import spread_scan
 
 
-def _unit(c: Column) -> Column:
-    nrm = F.sqrt(F.aggregate(c, F.lit(0.0), lambda s, x: s + x * x))
-    return F.transform(c, lambda x: x / nrm)
-
-
 def _dot(a: Column, b: Column) -> Column:
     return F.aggregate(F.zip_with(a, b, lambda x, y: x * y), F.lit(0.0),
                        lambda s, x: s + x)

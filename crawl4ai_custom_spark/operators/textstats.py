@@ -286,7 +286,7 @@ def bm25_rank(
     """Corpus-level Okapi BM25 as pure dataflow (no Python UDF):
     explode tokens -> tf per (doc, term) -> df per term -> idf -> score.
     idf = ln((N - df + 0.5)/(df + 0.5) + 1). Returns (id, bm25) per doc
-    with bm25 > 0. Mirrors kernel.textproc.BM25 and the SQL oracle exactly."""
+    with bm25 > 0. Mirrors the SQL oracle exactly."""
     qt = [t.lower() for t in query_terms if t]
     toks = docs.select(
         F.col(id_col).alias("id"),

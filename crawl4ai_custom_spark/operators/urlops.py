@@ -25,18 +25,6 @@ from ..kernel import urlnorm
 
 
 @F.pandas_udf(StringType())
-def canonicalize_udf(href: pd.Series, base: pd.Series) -> pd.Series:
-    cache: dict[tuple, str | None] = {}
-    out = []
-    for h, b in zip(href, base):
-        key = (h, b)
-        if key not in cache:
-            cache[key] = urlnorm.canonicalize_url(h, b)
-        out.append(cache[key])
-    return pd.Series(out, dtype="object")
-
-
-@F.pandas_udf(StringType())
 def canonicalize_abs_udf(url: pd.Series) -> pd.Series:
     return url.map(lambda u: urlnorm.canonicalize_url(u) if u else None)
 
@@ -100,29 +88,11 @@ def url_depth_col(col: Column) -> Column:
     return F.size(F.filter(F.split(path, "/"), lambda s: s != F.lit("")))
 
 
-def url_hash64(col: Column) -> Column:
-    """Native 64-bit hash of the canonical url — seen-set / bucket key."""
-    return F.xxhash64(col)
-
-
 def stable_hash60(col: Column) -> Column:
     """Oracle-reproducible 60-bit hash: int(md5(x)[:15], 16).
     Matches kernel.textproc.stable_hash64 and DuckDB
     ('0x'||substr(md5(x),1,15))::BIGINT."""
     return F.conv(F.substring(F.md5(col), 1, 15), 16, 10).cast("long")
-
-
-def with_canonical(df: DataFrame, url_col: str = "url",
-                   out_col: str = "url_canon") -> DataFrame:
-    """Add canonical-url + registrable-domain + hash columns, deduping the
-    url column before the pandas UDF so each distinct url is canonicalized
-    exactly once (lru_cache equivalent at dataflow level)."""
-    distinct = df.select(url_col).distinct()
-    canon = distinct.select(
-        F.col(url_col),
-        canonicalize_abs_udf(F.col(url_col)).alias(out_col),
-    ).withColumn("registrable_domain", registrable_domain_udf(F.col(out_col)))
-    return df.join(canon, url_col, "left")
 
 
 def url_template(url: Column) -> Column:

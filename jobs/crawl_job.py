@@ -38,10 +38,6 @@ def parse_args(argv):
     p.add_argument("--include-external", action="store_true")
     p.add_argument("--no-robots", action="store_true")
     p.add_argument("--no-bloom", action="store_true")
-    p.add_argument("--seen-filter", default="bloom",
-                   choices=["bloom", "cuckoo"],
-                   help="seen-set prefilter structure (cuckoo supports "
-                        "retirement for re-crawl scheduling)")
     p.add_argument("--base-delay", type=float, default=2.0)
     p.add_argument("--respect-crawl-delay", action="store_true",
                    help="honor robots Crawl-delay in per-domain wave budgets")
@@ -105,7 +101,6 @@ def main(argv=None) -> int:
         check_robots=not args.no_robots,
         respect_crawl_delay=args.respect_crawl_delay,
         use_bloom=not args.no_bloom,
-        seen_filter=args.seen_filter,
         score_threshold=(
             args.score_threshold if args.score_threshold is not None else -math.inf
         ),

@@ -2,9 +2,9 @@
 
 Builds each scale-critical plan at fixture size, asserts the markers that
 matter at 100 TB (column pruning into the scan, predicate pushdown,
-broadcast for small dims, single shuffle for the politeness window,
-shuffle-free bucketed seen scan), and writes the annotated excerpts to
-PLANS.md. Exits non-zero if any expectation fails.
+broadcast for small dims, single shuffle for the politeness window),
+and writes the annotated excerpts to PLANS.md. Exits non-zero if any
+expectation fails.
 
 Usage: python scripts/plan_audit.py
 """
@@ -34,10 +34,6 @@ def main() -> None:
         empty_host_state,
     )
     from crawl4ai_custom_spark.operators.robots import robots_gate
-    from crawl4ai_custom_spark.operators.seen import (
-        filter_unseen_bucketed,
-        save_seen_bucketed,
-    )
     from crawl4ai_custom_spark.session import get_spark
     from crawl4ai_custom_spark.sources.datagen import write_dataset
 
@@ -120,27 +116,9 @@ def main() -> None:
         [(r"BroadcastHashJoin", "robots table is tiny; frontier side never moves")],
     )
 
-    # 5. bucketed seen anti-join: seen side scans shuffle-free
+    # every plan below is audited with automatic broadcast off: a broadcast
+    # the plans rely on must come from an explicit hint
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    seen = spark.range(50000).select(F.xxhash64("id").alias("url_hash"))
-    with tempfile.TemporaryDirectory() as td:
-        save_seen_bucketed(seen, "plan_audit_seen", buckets=8,
-                           path=os.path.join(td, "seen"))
-        cand = spark.range(500).select((F.xxhash64("id") + 1).alias("url_hash"))
-        out = filter_unseen_bucketed(cand, "plan_audit_seen")
-        p = plan_of(out)
-        checks = []
-        for ok, label, why in [
-            ("Bucketed: true" in p, "`Bucketed: true`",
-             "the 10^10-row seen side is read in bucket order"),
-            (p.count("Exchange") == 1, "exactly one Exchange",
-             "only the candidate delta shuffles; the seen side never does"),
-        ]:
-            checks.append((("PASS  " if ok else "FAIL  ") + label, why))
-            if not ok:
-                failures.append(f"bucketed seen: {label}")
-        sections.append(("Seen anti-join — bucketed layout", p, checks))
-        spark.sql("drop table if exists plan_audit_seen")
 
     # 6. salted mega-host admission: two-stage top-k (north rule's explicit
     # skew splitting) — stage 1 windows on (domain, salt) so no single task

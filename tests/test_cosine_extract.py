@@ -1,6 +1,6 @@
 """CosineStrategy parity tests (reference extraction_strategy.py:135-492):
-ward-linkage merge math, semantic pre-filter selection/topup/cap, end-to-end
-cluster extraction, and ward-vs-dataflow agreement on separated clusters."""
+ward-linkage merge math, semantic pre-filter selection/topup/cap and
+end-to-end cluster extraction, with and without a query."""
 
 import numpy as np
 import pyspark.sql.functions as F
@@ -9,7 +9,6 @@ import pytest
 from crawl4ai_custom_spark.operators.cosine_extract import (
     _ward_merge_heights,
     cosine_cluster_extract,
-    cosine_cluster_extract_dataflow,
     semantic_prefilter,
     ward_cluster_labels,
 )
@@ -104,11 +103,23 @@ def test_cosine_cluster_extract_end_to_end(spark, chunk_df):
     assert [r["cluster_index"] for r in out2] == [1]
 
 
-def test_dataflow_variant_agrees_on_separated_clusters(spark, chunk_df):
-    kw = dict(query_vec=[1.0, 0.0, 0.0, 0.0], sim_threshold=0.3,
-              max_dist=0.2, word_count_threshold=3)
-    a = cosine_cluster_extract(chunk_df, **kw)
-    b = cosine_cluster_extract_dataflow(chunk_df, **kw)
-    ra = sorted(map(tuple, a.collect()))
-    rb = sorted(map(tuple, b.collect()))
-    assert ra == rb
+def test_cosine_cluster_extract_without_query_clusters_every_chunk(
+        spark, chunk_df):
+    # no query: every chunk passes in chunk order, identical embeddings
+    # merge, clusters are numbered by first occurrence
+    kw = dict(query_vec=None, max_dist=0.2, word_count_threshold=6)
+    out = cosine_cluster_extract(chunk_df, **kw).orderBy(
+        "id", "cluster_index").collect()
+    got = [(r["id"], r["cluster_index"], r["content"], r["n_chunks"])
+           for r in out]
+    assert got == [
+        (1, 1, "w1 c0 t0 w1 c3 t0", 2),
+        (1, 2, "w1 c1 t1 w1 c4 t1", 2),
+        (1, 3, "w1 c2 t2 w1 c5 t2", 2),
+        (2, 1, "w2 c0 t0 w2 c3 t0 w2 c6 t0", 3),
+        (2, 2, "w2 c1 t1 w2 c4 t1", 2),
+        (2, 3, "w2 c2 t2 w2 c5 t2", 2),
+    ]
+    kw["word_count_threshold"] = 7
+    assert [(r["id"], r["cluster_index"]) for r in
+            cosine_cluster_extract(chunk_df, **kw).collect()] == [(2, 1)]

@@ -670,7 +670,6 @@ def test_run_builds_no_rdd_and_final_bloom_covers_seen(
       - the last wave discovers nothing, so its commit skips the bloom
         fold (seed fold + wave-0 fold only), and the final snapshot's
         bloom still covers every url in its seen set."""
-    from crawl4ai_custom_spark.operators.frontier import _seen_union
     from crawl4ai_custom_spark.operators.seen import PartitionedBloom
 
     pages = pages_df.unionByName(
@@ -700,11 +699,188 @@ def test_run_builds_no_rdd_and_final_bloom_covers_seen(
     assert eng.pages.where(F.col("url_canon").isNull()).count() == 0
     assert [s["new_links"] > 0 for s in run.stats] == [True, False]
     assert len(folds) == 2
+    _assert_snapshot_bloom_covers_seen(spark, eng, str(tmp_path / "bloom"))
+
+
+def _assert_snapshot_bloom_covers_seen(spark, eng, state_dir):
+    """The latest snapshot's bloom flags every hash in its exact seen set:
+    a bloom false negative would bypass the exact anti-join."""
+    from crawl4ai_custom_spark.operators.frontier import _seen_union
+    from crawl4ai_custom_spark.operators.seen import PartitionedBloom
+
     snap = eng.store.read(eng.store.latest_wave())
     seen = _seen_union(spark, snap["_meta"]["seen_deltas"])
-    bloom = PartitionedBloom(spark, cfg.bloom_partitions, cfg.bloom_capacity,
-                             state_dir=str(tmp_path / "bloom"))
+    bloom = PartitionedBloom(spark, eng.cfg.bloom_partitions,
+                             state_dir=state_dir)
     bloom.state = snap["bloom"]
     flags = bloom.prefilter(seen).groupBy("bloom_maybe_seen").count().collect()
     assert {r["bloom_maybe_seen"]: r["count"] for r in flags} == {
         True: seen.count()}
+
+
+def test_saturated_bloom_crawl_equals_exact_crawl(
+        spark, pages_df, robots_df, tmp_path, monkeypatch):
+    """The bloom only prefilters: one so small that it fills up within the
+    crawl flags nearly every later candidate, which then all go through
+    the exact anti-join, and the crawl is the one the exact seen set
+    alone gives."""
+    import os
+
+    from crawl4ai_custom_spark.operators.seen import PartitionedBloom
+
+    def tiny_bloom(eng, state_dir=None):
+        return PartitionedBloom(
+            eng.spark, eng.cfg.bloom_partitions, capacity_per_partition=1,
+            state_dir=state_dir or os.path.join(
+                eng.checkpoint_dir, "_state", "bloom"))
+
+    runs = {}
+    for name, use_bloom in (("exact", False), ("saturated", True)):
+        if use_bloom:
+            monkeypatch.setattr(FrontierEngine, "_new_bloom", tiny_bloom)
+        cfg = CrawlConfig(strategy="bfs", max_depth=2, max_pages=200,
+                          politeness=PolitenessConfig(wave_seconds=1e9),
+                          use_bloom=use_bloom, bloom_partitions=4,
+                          bloom_min_seen=0)
+        eng = FrontierEngine(spark, pages_df, robots_df, cfg,
+                             checkpoint_dir=str(tmp_path / f"ck_{name}"),
+                             out_dir=str(tmp_path / f"out_{name}"))
+        run = eng.run(SEEDS)
+        runs[name] = sorted(
+            (r["wave"], r["url_canon"], r["order_in_wave"])
+            for r in run.admitted_log(spark).collect())
+    assert len(runs["exact"]) > 10
+    assert runs["saturated"] == runs["exact"]
+    # the filter really saturated: it flags hashes nothing ever added
+    bloom = tiny_bloom(eng, str(tmp_path / "probe"))
+    bloom.state = eng.store.read(eng.store.latest_wave())["bloom"]
+    probe = spark.range(1000).select(
+        F.xxhash64(F.concat(F.lit("never-"), F.col("id"))).alias("url_hash"))
+    assert bloom.prefilter(probe).where(
+        F.col("bloom_maybe_seen")).count() > 900
+    _assert_snapshot_bloom_covers_seen(spark, eng, str(tmp_path / "bloom"))
+
+
+def _site_seeds(spark, site_dir):
+    return [r["url"] for r in
+            spark.read.parquet(f"{site_dir}/seeds.parquet").collect()]
+
+
+def test_requeue_and_retire_recrawl_loop(spark, site_dir, pages_df, robots_df,
+                                         tmp_path):
+    """The re-crawl scheduling loop: requeue forces a re-crawl of chosen
+    urls; retire_seen forgets discovery (exact seen set compacted, bloom
+    rebuilt from it) so organic link rediscovery re-queues pages on the
+    next resumed crawl."""
+    seeds = _site_seeds(spark, site_dir)
+    cfg = CrawlConfig(
+        strategy="bfs", max_depth=2, max_pages=500,
+        politeness=PolitenessConfig(wave_seconds=1e9),
+        use_bloom=True, bloom_partitions=4, bloom_min_seen=0,
+    )
+    eng = FrontierEngine(
+        spark, pages_df, robots_df, cfg,
+        checkpoint_dir=str(tmp_path / "ck"), out_dir=str(tmp_path / "out"),
+    )
+    run1 = eng.run(seeds)
+    log1 = run1.admitted_log(spark).collect()
+    crawled = sorted({r["url_canon"] for r in log1})
+    assert len(crawled) > 10
+    hub = seeds[0].rstrip("/") + "/"
+    # children discovered FROM the hub (depth-1 rows whose parent is a seed)
+    children = sorted({
+        r["url_canon"] for r in log1
+        if r["wave"] == 1
+    })[:3]
+    assert children
+
+    # --- requeue: hub re-enters the frontier; resume re-crawls it ---------
+    n_q = eng.requeue([hub] if hub in crawled else [crawled[0]])
+    assert n_q == 1
+    # --- retire: children leave seen; the bloom is rebuilt from the rest --
+    n_r = eng.retire_seen(children)
+    assert n_r == len(children)
+    _assert_snapshot_bloom_covers_seen(spark, eng, str(tmp_path / "bloom"))
+    run2 = eng.run(seeds, resume=True)
+    log2 = run2.admitted_log(spark)
+    new_waves = log2.where(F.col("wave") > max(r["wave"] for r in log1))
+    re_admitted = {r["url_canon"] for r in new_waves.collect()}
+    # the requeued hub was re-crawled, and its retired children were
+    # organically re-discovered and re-crawled
+    assert any(u in re_admitted for u in (hub, crawled[0]))
+    assert set(children) <= re_admitted, (
+        sorted(set(children) - re_admitted))
+
+
+def test_diff_driven_recrawl_admits_exactly_changed_and_gone(
+        spark, site_dir, pages_df, robots_df, tmp_path):
+    """Close the re-crawl loop end-to-end. Crawl a site, then mutate it
+    (one hub page's content changes; two of its children vanish) and
+    schedule_recrawl + resume:
+
+      * the changed hub is requeued and re-fetched with the NEW content;
+      * the gone children are retired from seen (bloom rebuilt from the
+        kept set), organically re-discovered from the hub's re-crawl,
+        re-admitted through politeness, and recorded as fetch misses;
+      * NOTHING else is re-admitted (exact resume preserved).
+    """
+    pages = pages_df
+    seeds = _site_seeds(spark, site_dir)
+    cfg = CrawlConfig(
+        strategy="bfs", max_depth=3, max_pages=500,
+        politeness=PolitenessConfig(wave_seconds=1e9),
+        use_bloom=True, bloom_partitions=4, bloom_min_seen=0,
+    )
+    eng = FrontierEngine(
+        spark, pages, robots_df, cfg,
+        checkpoint_dir=str(tmp_path / "ck"), out_dir=str(tmp_path / "out"),
+    )
+    run1 = eng.run(seeds)
+    res1 = spark.read.parquet(f"{run1.results_dir}/*/results.parquet")
+    ok1 = res1.where(F.col("status_code") == 200)
+    # a crawled hub with >= 3 crawled children (children = rows whose
+    # parent_url is the hub)
+    hub_row = (
+        ok1.where(F.col("parent_url").isNotNull())
+        .groupBy("parent_url").count().where(F.col("count") >= 3)
+        .orderBy("parent_url").first()
+    )
+    assert hub_row is not None
+    hub = hub_row["parent_url"]
+    children = sorted(
+        r["url"] for r in
+        ok1.where(F.col("parent_url") == hub).select("url").collect()
+    )
+    gone = children[:2]
+    n_wave1 = run1.waves
+
+    marker = "<p>recrawl marker xyzzy fresh content</p>"
+    new_pages = (
+        pages.where(~F.col("url").isin(gone))
+        .withColumn(
+            "html",
+            F.when(
+                F.col("url") == hub,
+                F.encode(F.regexp_replace(
+                    F.decode(F.col("html"), "utf-8"),
+                    "</body>", marker + "</body>"), "utf-8"),
+            ).otherwise(F.col("html")),
+        )
+    )
+    info = eng.schedule_recrawl(new_pages)
+    assert info["n_changed"] == 1 and info["n_requeued"] == 1
+    assert info["n_gone"] == 2 and info["n_retired"] == 2
+
+    run2 = eng.run(seeds, resume=True)
+    res2 = spark.read.parquet(f"{run2.results_dir}/*/results.parquet")
+    new_rows = res2.where(
+        F.col("wave").cast("int") >= n_wave1
+    ).select("url", "status_code", "text").collect()
+    re_admitted = {r["url"] for r in new_rows}
+    # exactly the changed hub + its two vanished children, nothing else
+    assert re_admitted == {hub, *gone}, re_admitted
+    by_url = {r["url"]: r for r in new_rows}
+    assert by_url[hub]["status_code"] == 200
+    assert "recrawl marker xyzzy" in by_url[hub]["text"]
+    for g in gone:
+        assert by_url[g]["status_code"] != 200  # fetch miss: page is gone

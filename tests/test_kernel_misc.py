@@ -1,47 +1,24 @@
-"""Unit tests: textproc (BM25/tokenize), bloom filter, robots.txt matcher."""
+"""Unit tests: textproc stable hash, content-filter tokens and BM25, bloom
+filter, robots.txt matcher."""
+
+import math
 
 import numpy as np
 import pytest
 
 from crawl4ai_custom_spark.kernel.bloom import BloomFilter, optimal_params
-from crawl4ai_custom_spark.kernel.robotstxt import can_fetch, parse_robots
-from crawl4ai_custom_spark.kernel.textproc import (
-    BM25,
-    char_ngrams,
-    clean_tokens,
-    stable_hash64,
-    tokenize,
-    word_shingles,
+from crawl4ai_custom_spark.kernel.content_filter import (
+    BM25Okapi,
+    ref_clean_tokens,
 )
-
-
-def test_tokenize_and_clean():
-    assert tokenize("Hello, World! 42x") == ["hello", "world", "42x"]
-    toks = clean_tokens("The running dogs are jumping", do_stem=True)
-    assert "the" not in toks and "are" not in toks
-    assert "runn" in toks or "running" in toks or "run" in toks
-
-
-def test_bm25_ranks_relevant_doc_higher():
-    corpus = [
-        ["spark", "query", "engine"],
-        ["cooking", "pasta", "recipe"],
-        ["spark", "spark", "shuffle", "join"],
-    ]
-    bm = BM25(corpus)
-    s = bm.scores(["spark"])
-    assert s[0] > s[1] and s[2] > s[1]
+from crawl4ai_custom_spark.kernel.robotstxt import can_fetch, parse_robots
+from crawl4ai_custom_spark.kernel.textproc import stable_hash64
 
 
 def test_stable_hash64_is_60bit_positive_and_stable():
     h = stable_hash64("https://example.com/")
     assert 0 <= h < (1 << 60)
     assert h == stable_hash64("https://example.com/")
-
-
-def test_ngrams_and_shingles():
-    assert char_ngrams("ab cd", 3) == ["ab ", "b c", " cd"]
-    assert word_shingles("a b c d", 3) == ["a b c", "b c d"]
 
 
 def test_bloom_basic_membership():
@@ -68,6 +45,82 @@ def test_optimal_params_monotone():
     m1, _ = optimal_params(1000, 0.01)
     m2, _ = optimal_params(1000, 0.001)
     assert m2 > m1
+
+
+def _random_keys(n, seed):
+    rng = np.random.default_rng(seed)
+    return rng.integers(0, 1 << 63, size=n, dtype=np.int64).astype(np.uint64)
+
+
+def test_bloom_fp_rate_on_random_keys_at_capacity():
+    bf = BloomFilter(capacity=20_000, fp_rate=0.01)
+    keys = _random_keys(20_000, 1)
+    bf.add_many(keys)
+    assert bf.contains_many(keys).all()  # zero false negatives
+    fp = bf.contains_many(_random_keys(20_000, 2)).mean()
+    assert fp < 0.02, fp  # design rate 1% at full capacity
+    assert 18_000 < bf.cardinality_estimate() < 22_000
+
+
+def test_bloom_overfilled_never_false_negative():
+    """A partition's seen set can outgrow the filter's capacity: membership
+    then degrades only in the false-positive direction."""
+    bf = BloomFilter(capacity=256, fp_rate=0.01)
+    keys = _random_keys(4 * 256, 3)
+    bf.add_many(keys)
+    assert bf.contains_many(keys).all()
+    fp = bf.contains_many(_random_keys(4_096, 4)).mean()
+    assert 0.05 < fp < 1.0, fp
+
+
+def test_bloom_fold_is_order_and_batch_free():
+    """Folding hashes batch by batch (one add per wave) and building once
+    from the whole set (retire_seen's rebuild) give the same bits."""
+    keys = _random_keys(5_000, 5)
+    whole = BloomFilter(capacity=5_000, fp_rate=0.01)
+    whole.add_many(keys)
+    folded = BloomFilter(capacity=5_000, fp_rate=0.01)
+    perm = np.random.default_rng(6).permutation(len(keys))
+    for batch in np.array_split(keys[perm], 7):
+        folded.add_many(batch)
+    folded.add_many(keys[:0])  # a wave with no new hashes
+    assert folded.to_bytes() == whole.to_bytes()
+    back = BloomFilter(capacity=5_000, fp_rate=0.01, bits=whole.to_bytes())
+    assert (back.m, back.k) == (whole.m, whole.k)
+    assert back.to_bytes() == whole.to_bytes()
+
+
+def test_bloom_readding_keys_changes_no_bit():
+    """A resumed or re-crawled url's hash is folded again: the bits (and
+    so the cardinality estimate) stay as they were."""
+    keys = _random_keys(3_000, 7)
+    bf = BloomFilter(capacity=5_000, fp_rate=0.01)
+    bf.add_many(keys)
+    before = bf.to_bytes()
+    bf.add_many(keys[::3])
+    assert bf.to_bytes() == before
+    assert 2_700 < bf.cardinality_estimate() < 3_300
+
+
+def test_ref_clean_tokens_drops_short_noise_stopwords_and_arrows():
+    # exact-match drops on whitespace splits: case and punctuation stay
+    toks = "The running dogs are at \u2191top ok the jumping, \u25b2up".split()
+    assert ref_clean_tokens(toks) == ["The", "running", "dogs", "jumping,"]
+
+
+def test_bm25okapi_ranks_relevant_doc_higher_and_floors_negative_idf():
+    corpus = [
+        ["spark", "query", "engine"],
+        ["cooking", "pasta", "recipe"],
+        ["spark", "spark", "shuffle", "join"],
+    ]
+    bm = BM25Okapi(corpus)
+    s = bm.get_scores(["spark"])
+    assert s[1] == 0.0 and s[0] > 0.0 and s[2] > s[0]
+    # "spark" is in 2 of 3 docs: its raw idf is negative, floored to
+    # epsilon (0.25) x the mean raw idf over the 8 distinct words
+    raw = math.log(2.5) - math.log(1.5)  # df = 1
+    assert bm.idf["spark"] == pytest.approx(0.25 * (7 * raw - raw) / 8)
 
 
 ROBOTS = """
@@ -118,13 +171,18 @@ def test_pdf_kernel_roundtrip():
 
 def test_pdf_operator(spark):
     from crawl4ai_custom_spark.kernel.pdfmini import build_simple_pdf
-    from crawl4ai_custom_spark.operators.pdf import extract_pdf_text
+    from crawl4ai_custom_spark.operators.pdf import extract_pdf
 
     rows = [(i, bytearray(build_simple_pdf([f"page one {i}", f"two {i}"])))
             for i in range(5)]
     df = spark.createDataFrame(rows, ["media_id", "payload"])
-    out = {r["media_id"]: r for r in extract_pdf_text(df).collect()}
-    assert out[3]["n_pages"] == 2 and out[3]["text"] == "page one 3 two 3"
+    out = {(r["media_id"], r["page_number"]): r
+           for r in extract_pdf(df).collect()}
+    assert len(out) == 5 * 3  # whole-doc row + one row per page
+    assert out[3, 0]["meta_pages"] == 2
+    assert out[3, 0]["page_text"] == "page one 3 two 3"
+    assert out[3, 1]["page_text"] == "page one 3"
+    assert out[3, 2]["page_text"] == "two 3" and out[3, 2]["meta_pages"] == 2
 
 
 def test_imagecodec_png_roundtrip_all_filters():

@@ -5,7 +5,6 @@ from crawl4ai_custom_spark.kernel.urlnorm import (
     is_external_url,
     normalize_url,
     registrable_domain,
-    url_depth,
 )
 
 BASE = "https://example.com/dir/page.html"
@@ -72,8 +71,3 @@ def test_is_external():
     assert not is_external_url("https://sub.example.com/a", "https://example.com/")
     assert is_external_url("https://other.com/a", "https://example.com/")
     assert is_external_url("mailto:x@y.com", "https://example.com/")
-
-
-def test_url_depth():
-    assert url_depth("https://e.com/") == 0
-    assert url_depth("https://e.com/a/b/c") == 3

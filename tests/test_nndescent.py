@@ -216,11 +216,12 @@ def test_graph_ann_search_honors_explicit_entry_points(spark, clustered):
     exact.unpersist(); graph.unpersist()
 
 
-def test_driver_path_matches_distributed(spark, clustered):
+def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
     """The size-gated driver twins (_local_knn_graph / _local_graph_ann)
     must be BIT-identical to the distributed dataflow: same left-fold
     float order, same (cosine DESC, id ASC) orderings. Compares full row
     sets including the unrounded cosine doubles."""
+    from crawl4ai_custom_spark.operators import nndescent
     from crawl4ai_custom_spark.operators.nndescent import (
         graph_ann_search, nn_descent)
 
@@ -237,3 +238,54 @@ def test_driver_path_matches_distributed(spark, clustered):
                               rounds=2, n_entry=6, driver_max_vectors=0)
     assert sorted(map(tuple, g_fast.collect())) == \
         sorted(map(tuple, g_slow.collect()))
+
+    # a bound the corpus fits: few queries take the driver twin, queries
+    # past the bound are never collected and run distributed
+    n = clustered.count()
+    g_local = graph_ann_search(fast, clustered, queries, k=4, beam=8,
+                               rounds=2, n_entry=6, driver_max_vectors=n)
+    assert sorted(map(tuple, g_local.collect())) == \
+        sorted(map(tuple, g_slow.collect()))
+    many = clustered.unionByName(
+        queries.withColumn("vec_id", F.col("vec_id") + 100_000))
+    want = graph_ann_search(slow, clustered, many, k=4, beam=8, rounds=2,
+                            n_entry=6, driver_max_vectors=0)
+
+    def no_driver_twin(*args, **kwargs):
+        raise AssertionError("driver twin ran")
+
+    monkeypatch.setattr(nndescent, "_local_graph_ann", no_driver_twin)
+    got = graph_ann_search(fast, clustered, many, k=4, beam=8, rounds=2,
+                           n_entry=6, driver_max_vectors=n)
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))
+
+
+
+def test_graph_ann_entry_points_past_bound_run_distributed(
+        spark, clustered, monkeypatch):
+    """A corpus and queries under the driver bound but an entry-point
+    table past it (here 408 rows of the 8 one-per-cluster ids): the
+    entry points are never collected whole and the search runs the
+    distributed beam loop."""
+    from crawl4ai_custom_spark.operators import nndescent
+    from crawl4ai_custom_spark.operators.nndescent import (
+        graph_ann_search, nn_descent)
+
+    graph = nn_descent(clustered, k=4, rounds=2, n_planes=4)
+    queries = clustered.where(F.col("vec_id") < 6)
+    entries = spark.createDataFrame(
+        [(i % 8,) for i in range(408)], ["node"])
+    want = graph_ann_search(graph, clustered, queries, k=4, beam=8,
+                            rounds=2, entry_points=entries,
+                            driver_max_vectors=0)
+
+    def no_driver_twin(*args, **kwargs):
+        raise AssertionError("driver twin ran")
+
+    monkeypatch.setattr(nndescent, "_local_graph_ann", no_driver_twin)
+    got = graph_ann_search(graph, clustered, queries, k=4, beam=8, rounds=2,
+                           entry_points=entries,
+                           driver_max_vectors=clustered.count())
+    assert sorted(map(tuple, got.collect())) == \
+        sorted(map(tuple, want.collect()))

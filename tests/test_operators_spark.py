@@ -545,21 +545,43 @@ def test_partitioned_bloom_prefilter_no_false_negatives(spark):
     assert fresh.join(first.select("url_hash"), "url_hash").count() == 0
 
 
-def test_bloom_save_load_roundtrip(spark, tmp_path):
-    bloom = PartitionedBloom(spark, num_partitions=2, capacity_per_partition=1000)
-    data = spark.createDataFrame([(i,) for i in range(50)], ["url_hash"])
-    bloom.add(data)
-    path = str(tmp_path / "bloom")
-    bloom.save(path)
-    bloom2 = PartitionedBloom.load(spark, path, 2, 1000)
-    flagged = bloom2.prefilter(data.select("url_hash"))
-    assert flagged.where(F.col("bloom_maybe_seen")).count() == 50
+def test_partitioned_bloom_folds_accumulate_across_state_swaps(spark):
+    """Each add folds into the state the previous add wrote back: after
+    three folds and an empty one every added hash, signed xxhash64 values
+    included, is still flagged; an empty filter flags nothing."""
+    urls = spark.range(600).select(
+        "id", F.xxhash64(F.concat(F.lit("u"), F.col("id"))).alias("url_hash"))
+    assert urls.where(F.col("url_hash") < 0).count() > 0
+    bloom = PartitionedBloom(spark, num_partitions=4,
+                             capacity_per_partition=10_000)
+    assert bloom.prefilter(urls).where(F.col("bloom_maybe_seen")).count() == 0
+    for lo in (0, 100, 200):
+        bloom.add(urls.where(F.col("id").between(lo, lo + 99))
+                  .select("url_hash"))
+    bloom.add(urls.where(F.lit(False)).select("url_hash"))
+    flags = {r["id"]: r["bloom_maybe_seen"]
+             for r in bloom.prefilter(urls).collect()}
+    assert all(flags[i] for i in range(300))
+    assert sum(flags[i] for i in range(300, 600)) <= 15  # ~1% design rate
 
 
 def test_filter_unseen_exact(spark):
     cands = spark.createDataFrame([(i,) for i in range(10)], ["url_hash"])
     seen = spark.createDataFrame([(i,) for i in range(0, 10, 2)], ["url_hash"])
     assert filter_unseen_exact(cands, seen).count() == 5
+
+
+def test_filter_unseen_exact_keeps_candidate_rows_and_columns(spark):
+    """The seen anti-join passes every candidate column and duplicate
+    through and matches on the named hash column only."""
+    cands = spark.createDataFrame(
+        [(1, "a", 0), (2, "b", 1), (2, "b2", 1), (3, "c", 2)],
+        ["h", "url_canon", "depth"])
+    seen = spark.createDataFrame([(1,), (4,)], ["h"])
+    out = filter_unseen_exact(cands, seen, hash_col="h")
+    assert out.columns == ["h", "url_canon", "depth"]
+    assert sorted(map(tuple, out.collect())) == [
+        (2, "b", 1), (2, "b2", 1), (3, "c", 2)]
 
 
 def test_regex_catalog_extract(spark):
@@ -663,35 +685,6 @@ def test_link_preview_cap_dedup_and_fallback(spark):
     assert miss["total_score"] == 4.0
 
 
-def test_bucketed_seen_antijoin_plan(spark, tmp_path):
-    """The 10^10-scale layout claim, asserted on the physical plan: a
-    bucketed seen table anti-joins WITHOUT shuffling the seen side — the
-    only Exchange is the candidate delta repartitioning to the bucket
-    count."""
-    from crawl4ai_custom_spark.operators.seen import (
-        filter_unseen_bucketed,
-        save_seen_bucketed,
-    )
-
-    old_thresh = spark.conf.get("spark.sql.autoBroadcastJoinThreshold")
-    spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
-    try:
-        seen = spark.range(10000).select(F.xxhash64("id").alias("url_hash"))
-        save_seen_bucketed(seen, "seen_bucketed_test", buckets=8,
-                           path=str(tmp_path / "seen_b"))
-        cand = spark.range(500).select(
-            (F.xxhash64("id") + 1).alias("url_hash")
-        )
-        out = filter_unseen_bucketed(cand, "seen_bucketed_test")
-        plan = out._jdf.queryExecution().executedPlan().toString()
-        assert "Bucketed: true" in plan
-        assert plan.count("Exchange") == 1  # candidates only; seen side none
-        assert out.count() == 500  # +1-shifted hashes: all unseen
-    finally:
-        spark.conf.set("spark.sql.autoBroadcastJoinThreshold", old_thresh)
-        spark.sql("drop table if exists seen_bucketed_test")
-
-
 def _ref_chunk_sim(text, threshold, overlap, rate=0.75):
     """Independent simulation of the reference's streaming chunk merge
     (utils.py:76-160, no-tokenizer path) for differential testing."""
@@ -765,32 +758,6 @@ def test_schema_extract_xpath(spark):
     # from the record unless the schema gives a default
     assert recs[1]["name"] == "Gadget" and "price2" not in recs[1]
     assert recs[0]["link"] == "/w1" and recs[1]["link"] == "/g1"
-
-
-def test_llm_boundary_plumbing(spark):
-    """LLM strategies are out of scope (external service) but the Spark
-    plumbing is real: chunking, batch md5 dedup, in-order reassembly —
-    exercised with the deterministic stub client."""
-    from crawl4ai_custom_spark.operators.llm_boundary import (
-        LLMClient,
-        StubLLMClient,
-        llm_content_filter,
-    )
-
-    docs = spark.createDataFrame(
-        [
-            ("a", "First sentence. Second one! Third thing? Fourth."),
-            ("b", ""),
-            ("c", "Only sentence."),
-        ],
-        ["doc_id", "text"],
-    )
-    out = {r["id"]: r["fit_text"]
-           for r in llm_content_filter(docs, StubLLMClient(2)).collect()}
-    assert out["a"] == "First sentence. Second one!"
-    assert out["b"] == "" and out["c"] == "Only sentence."
-    with pytest.raises(NotImplementedError):
-        LLMClient().complete("x")
 
 
 def test_cluster_pairs_and_keepers(spark, tmp_path):
@@ -3710,6 +3677,30 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
         winnow_fingerprints(docs, window=0)
 
 
+def test_winnow_matches_doc_bound_switches_path_not_pairs(spark):
+    """512 docs run the local pair loop, 513 the fingerprint join; both
+    give the pairs a plain set intersection gives. Docs 2j and 2j+1 share
+    two fingerprints, the four docs of a quad share one."""
+    from crawl4ai_custom_spark.operators.dedup import winnow_matches
+
+    for n_docs, local in ((512, True), (513, False)):
+        rows = [(d, h) for d in range(n_docs)
+                for h in (10_000 + d, 20_000 + d // 2, 30_000 + d // 4)]
+        fp = spark.createDataFrame(rows, "id long, fp_hash long")
+        by = {}
+        for d, h in rows:
+            by.setdefault(d, set()).add(h)
+        for min_shared in (1, 2):
+            want = sorted(
+                (a, b, len(by[a] & by[b]))
+                for a in by for b in by
+                if a < b and len(by[a] & by[b]) >= min_shared)
+            out = winnow_matches(fp, min_shared=min_shared)
+            plan = out._jdf.queryExecution().analyzed().toString()
+            assert ("Join" not in plan) == local, (n_docs, plan)
+            assert sorted(map(tuple, out.collect())) == want
+
+
 def test_fuzzy_term_pairs_exact_vs_bruteforce(spark):
     """Deletion-neighborhood fuzzy join equals brute-force Levenshtein<=1
     on a fixture covering substitution/insertion/deletion/identity/
@@ -4440,6 +4431,64 @@ def test_pagerank_family_driver_path_matches_distributed(spark, tmp_path):
         r8(spam_mass(edges, seeds, 2,
                      checkpoint_dir=str(tmp_path / "sm")),
            ["pagerank", "core_rank"])
+
+
+def _seed_gate_graph(spark):
+    edges = spark.createDataFrame(
+        [(i, (i * 7 + 1) % 60) for i in range(60)], ["src", "dst"]
+    ).where("src != dst")
+
+    def r8(df, cols):
+        return sorted(map(tuple, df.select(
+            "node", *[F.round(F.col(c) + 1e-12, 8).alias(c) for c in cols]
+        ).collect()))
+
+    return edges, r8
+
+
+def test_trustrank_seeds_past_gate_run_distributed(spark, monkeypatch):
+    """With the edges under the driver gate but more distinct seeds than
+    it allows, the seed table is never collected whole: trustrank and
+    spam_mass run the distributed chain (the driver twin never runs) and
+    equal the default gate's driver result."""
+    import crawl4ai_custom_spark.operators.linkgraph as lg
+
+    edges, r8 = _seed_gate_graph(spark)
+    seeds = spark.range(0, 100).selectExpr("id as node")  # 40 off-graph
+    want_tr = r8(lg.trustrank(edges, seeds, 2), ["rank"])
+    want_sm = r8(lg.spam_mass(edges, seeds, 1), ["pagerank", "core_rank"])
+
+    def no_twin(*args, **kwargs):
+        raise AssertionError("driver twin ran")
+
+    monkeypatch.setattr(lg, "_DRIVER_MAX_EDGES", 80)
+    monkeypatch.setattr(lg, "_local_power_iteration", no_twin)
+    assert r8(lg.trustrank(edges, seeds, 2), ["rank"]) == want_tr
+    assert r8(lg.spam_mass(edges, seeds, 1),
+              ["pagerank", "core_rank"]) == want_sm
+
+
+def test_trustrank_duplicate_seed_rows_count_once_at_gate(spark, tmp_path,
+                                                          monkeypatch):
+    """The seed gate counts DISTINCT seeds: 200 rows of 10 seeds stay on
+    the driver under an 80-row gate and equal the distributed chain."""
+    import crawl4ai_custom_spark.operators.linkgraph as lg
+
+    edges, r8 = _seed_gate_graph(spark)
+    seeds = spark.range(0, 200).selectExpr("(id % 10) * 5 as node")
+    want = r8(lg.trustrank(edges, seeds, 2,
+                           checkpoint_dir=str(tmp_path / "tr")), ["rank"])
+    calls = []
+    twin = lg._local_power_iteration
+
+    def counting_twin(*args, **kwargs):
+        calls.append(1)
+        return twin(*args, **kwargs)
+
+    monkeypatch.setattr(lg, "_DRIVER_MAX_EDGES", 80)
+    monkeypatch.setattr(lg, "_local_power_iteration", counting_twin)
+    assert r8(lg.trustrank(edges, seeds, 2), ["rank"]) == want
+    assert calls == [1]
 
 
 def test_exact_jaccard_driver_path_matches_distributed(spark):

@@ -10,14 +10,16 @@ import pyspark.sql.functions as F
 import pytest
 
 from crawl4ai_custom_spark.operators.extraction import extract_pages, links_table
+from crawl4ai_custom_spark.kernel.urlnorm import canonicalize_url
 from crawl4ai_custom_spark.operators.urlops import (
+    canonicalize_abs_udf,
+    registrable_domain_udf,
     stable_hash60,
     url_depth_col,
     url_extension,
     url_host,
     url_is_valid,
     url_path,
-    with_canonical,
 )
 from crawl4ai_custom_spark.sources.pages import load_latest_pages, load_pages
 
@@ -71,15 +73,35 @@ def test_url_native_expressions(spark):
     assert not r2["valid"] and not r3["valid"]
 
 
-def test_with_canonical_adds_domain(spark):
+def test_url_depth(spark):
     df = spark.createDataFrame(
-        [("https://WWW.Example.com/a/?utm_source=x",), ("https://shop1.example1.com/b#f",)],
+        [("https://e.com/",), ("https://e.com",), ("https://e.com/a/b/c",),
+         ("https://e.com/a//b/?q=1/2",)],
         ["url"],
     )
-    out = {r["url"]: r for r in with_canonical(df).collect()}
-    r = out["https://WWW.Example.com/a/?utm_source=x"]
-    assert r["url_canon"] == "https://www.example.com/a"
-    assert r["registrable_domain"] == "example.com"
+    got = [r[0] for r in df.select(url_depth_col(F.col("url"))).collect()]
+    assert got == [0, 0, 3, 2]
+
+
+def test_canonical_url_and_domain_udfs(spark):
+    """The frontier's seed columns: the kernel's canonical key and its
+    registrable domain, NULL for NULL or empty input."""
+    urls = ["https://WWW.Example.com/a/?utm_source=x",
+            "https://shop1.example1.com/b#f", None, ""]
+    df = spark.createDataFrame([(u,) for u in urls], "url string")
+    rows = df.select(
+        "url", canonicalize_abs_udf(F.col("url")).alias("url_canon")
+    ).withColumn(
+        "registrable_domain", registrable_domain_udf(F.col("url_canon"))
+    ).collect()
+    got = [(r["url_canon"], r["registrable_domain"]) for r in rows]
+    assert got == [
+        ("https://www.example.com/a", "example.com"),
+        ("https://shop1.example1.com/b", "example1.com"),
+        (None, None),
+        (None, None),
+    ]
+    assert [g[0] for g in got[:2]] == [canonicalize_url(u) for u in urls[:2]]
 
 
 def test_stable_hash60_matches_kernel(spark):

@@ -6,10 +6,11 @@ Spark re-expression of the reference's deep-crawl strategies
 dispatcher (async_dispatcher.py): one Spark job per wave —
 
   frontier Δ -> politeness admission (per-domain window top-k + global
-  ordered budget) -> robots gate -> "fetch" (join latest pages) ->
-  extraction mapInPandas -> link posexplode -> dedup (bloom pre-filter +
-  exact seen anti-join) -> score/filter -> next frontier Δ;
-  seen/host_state MERGE + snapshot checkpoint per wave.
+  ordered budget) -> "fetch" (raw captures ⋈ admitted, then the latest
+  capture per admitted url) -> extraction mapInPandas -> link posexplode
+  -> score/filter -> dedup (bloom pre-filter + exact seen anti-join) ->
+  robots verdict -> next frontier Δ; seen/host_state MERGE + snapshot
+  checkpoint per wave.
 
 Determinism contract: admission order is (score DESC, depth ASC, url ASC);
 link dedup keeps the (score DESC, depth ASC, parent ASC) winner; therefore
@@ -123,6 +124,28 @@ def _parquet_count_eq(path: str, column: str, value: int,
         col = pq.read_table(f, columns=[column]).column(0)
         n += pc.sum(pc.equal(col, value).cast("int64")).as_py() or 0
     return n
+
+
+def _parquet_min(path: str, column: str) -> Any | None:
+    """Min of a top-level ``column`` over a written parquet directory from
+    row-group footer statistics — no Spark job. None when the path is not
+    on a local filesystem or a non-empty row group has no min/max for it."""
+    import glob
+
+    import pyarrow.parquet as pq
+
+    mins = []
+    for f in glob.glob(os.path.join(path, "*.parquet")):
+        md = pq.read_metadata(f)
+        leaf = [md.schema.column(c).path for c in range(md.num_columns)].index(column)
+        for rg in (md.row_group(g) for g in range(md.num_row_groups)):
+            if not rg.num_rows:
+                continue
+            st = rg.column(leaf).statistics
+            if st is None or not st.has_min_max:
+                return None
+            mins.append(st.min)
+    return min(mins, default=None)
 
 
 def _seen_union(spark: SparkSession, paths: list[str]) -> DataFrame:
@@ -325,8 +348,6 @@ class FrontierEngine:
         self.checkpoint_dir = checkpoint_dir or tempfile.mkdtemp(prefix="crawl_ckpt_")
         self.out_dir = out_dir or tempfile.mkdtemp(prefix="crawl_out_")
         self.store = CheckpointStore(spark, self.checkpoint_dir)
-        # the "fetchable web": latest capture per url, keyed by url
-        self._pages_epoch = -1
         self.update_pages(pages)
 
     # ------------------------------------------------------------------
@@ -486,16 +507,15 @@ class FrontierEngine:
         if preview is not None:
             from .headpeek import peek_head
 
-            # peek ONLY the pages this wave actually links to: semi-join the
-            # pages table down to the wave's distinct hrefs BEFORE the head
-            # regex scan, so the peek is O(Δ links), never a full-table scan
-            # (at 10^10 pages a per-wave full regex pass would dominate the
-            # crawl). The href set is the wave's discovery delta — small —
-            # so AQE turns this into a broadcast semi-join.
-            wave_targets = links.select(F.col("href")).distinct()
+            # peek ONLY the pages this wave links to: semi-join the captures
+            # to the wave's distinct hrefs (small: AQE broadcasts them)
+            # BEFORE the latest-capture window and the head regex scan — the
+            # optimizer does not push a semi-join below the window's filter,
+            # and a full-table pass per wave would dominate at 10^10 pages.
+            wave_targets = links.select(F.col("href").alias("url_canon")).distinct()
             heads = peek_head(
-                self.pages.select(F.col("url_canon").alias("href"), "html")
-                .join(wave_targets, "href", "semi")
+                self._fetch(wave_targets, "semi")
+                .select(F.col("url_canon").alias("href"), "html")
             ).select("href", "head_title", "head_description", "head_keywords")
             scored = (
                 scored.join(heads, "href", "left")
@@ -534,6 +554,19 @@ class FrontierEngine:
         return chain
 
     # ------------------------------------------------------------------
+    def _fetch(self, urls: DataFrame, how: str = "right") -> DataFrame:
+        """"Fetch" ``urls`` (keyed ``url_canon``): raw captures ⋈ urls, then
+        the latest capture per url — no copy of the web. ``how="right"`` is
+        the wave fetch (html NULL on a miss), ``"semi"`` the link peek. A
+        right join builds on the left: the CAPTURES side is broadcast under
+        autoBroadcastJoinThreshold, else the join is sort-merge (ROADMAP
+        item 2). Either way the window on the admitted key (each miss its
+        own group) reuses the join's partitioning: no Exchange."""
+        from ..sources.pages import latest_pages
+
+        return latest_pages(
+            self._captures.join(urls, "url_canon", how), key="url_canon")
+
     def _materialize(self, df: DataFrame, name: str) -> DataFrame:
         """Write+read once (lineage truncation / materialized view)."""
         path = os.path.join(self.checkpoint_dir, "_state", name)
@@ -550,33 +583,10 @@ class FrontierEngine:
         spark, cfg = self.spark, self.cfg
         stats: list[dict[str, Any]] = []
         bloom = self._new_bloom() if cfg.use_bloom else None
-
-        # materialize the latest-capture "web" once: every wave's fetch join
-        # scans this parquet with pushdown instead of re-running the window
-        # (guarded — repeated run() calls, e.g. streaming emission, must not
-        # overwrite the materialization they are reading from). When the
-        # input is ALREADY one-row-per-url (a pre-deduped latest table, the
-        # common production layout), the window is a no-op and the rewrite
-        # would copy the entire web once per crawl — the uniqueness probe
-        # below scans only the url column (column-pruned, no html IO).
-        if not getattr(self, "_pages_materialized", False):
-            # "unique by url?" probed as existence-of-any-dup-group: the
-            # partial agg + limit-1 short-circuits, where the previous
-            # count+countDistinct pair paid an Expand + two full
-            # aggregation phases for two exact numbers nobody needed
-            unique = (
-                self._pages_input.groupBy("url")
-                .agg(F.count(F.lit(1)).alias("c"))
-                .where(F.col("c") > 1).isEmpty()
-            )
-            if unique:
-                self.pages = self._pages_input.select(*self._page_cols)
-            else:
-                self.pages = self._materialize(
-                    self.pages,
-                    f"pages_latest_{getattr(self, '_pages_epoch', 0)}",
-                )
-            self._pages_materialized = True
+        # hashes discovered but not yet folded into the bloom: the seeds,
+        # which fold on wave 0's commit thread together with wave 0's links
+        bloom_pending: DataFrame | None = None
+        frontier_cols = [c.split(" ")[0] for c in FRONTIER_DDL.split(", ")]
 
         # The seen set is APPEND-ONLY: a union view over immutable delta
         # files (the seed frontier + each wave's new_links parquet, which
@@ -609,25 +619,26 @@ class FrontierEngine:
             trap_deltas_meta = list(td) if td is not None else None
             if bloom is not None and "bloom" in snap:
                 bloom.state = snap["bloom"]  # parquet-backed snapshot read
+            n_frontier = _parquet_rows(frontier_path, fallback=frontier)
         else:
-            seeds_all = self._materialize(
-                self._seed_frontier(seed_urls), "seeds_all"
-            )
             # seen/bloom hold EVERY discovered url (robots-blocked included,
-            # matching the oracle); the frontier is gated ONCE at entry —
-            # each row is robots-gated exactly once (here for seeds, on the
-            # discovery delta for links), never re-gated wave over wave
-            seed_fr = seeds_all
-            if cfg.check_robots and self.robots is not None:
-                seed_fr = robots_gate(seed_fr, self.robots)
-            frontier = self._materialize(seed_fr, "frontier_init")
-            frontier_path = os.path.join(self.checkpoint_dir, "_state", "frontier_init")
-            seen_paths = [
-                os.path.join(self.checkpoint_dir, "_state", "seeds_all")
-            ]
+            # matching the oracle); the robots verdict is a stored column of
+            # the one seed write, as of each discovery delta, so every row
+            # is robots-gated exactly once and the frontier's size is a
+            # pruned column tally (no job).
+            seeds_all = self._materialize(
+                robots_mark(self._seed_frontier(seed_urls),
+                            self.robots if cfg.check_robots else None),
+                "seeds_all",
+            )
+            seeds_path = os.path.join(self.checkpoint_dir, "_state", "seeds_all")
+            frontier = seeds_all.where(F.col("robots_allowed")).select(*frontier_cols)
+            n_frontier = _parquet_count_eq(seeds_path, "robots_allowed", True,
+                                           fallback=seeds_all)
+            seen_paths = [seeds_path]
             host_state = empty_host_state(spark)
             if bloom is not None:
-                bloom.add(seeds_all.select("url_hash"))
+                bloom_pending = seeds_all.select("url_hash")
             if os.path.isdir(self.out_dir):
                 shutil.rmtree(self.out_dir)
             os.makedirs(self.out_dir, exist_ok=True)
@@ -652,12 +663,11 @@ class FrontierEngine:
                     elif os.path.isdir(tc):
                         trap_count_paths.append(tc)
 
-        frontier_cols = [c.split(" ")[0] for c in FRONTIER_DDL.split(", ")]
         # wave-invariant Columns, built once per run (each is a tree of
         # py4j calls; only discovered_wave changes from wave to wave)
         fetch_status = F.when(F.col("html").isNull(), 404).otherwise(
             F.coalesce(F.col("_page_status"), F.lit(200))
-            if "_page_status" in self.pages.columns
+            if "_page_status" in self._captures.columns
             else F.lit(200)
         )
         # parent-page context (extract_page_context parity) is computed ONCE
@@ -746,21 +756,13 @@ class FrontierEngine:
                     _t[name] = round(_time.time() - _t.pop("_w0"), 2)
                     _t["_w0"] = _time.time()
 
-                # frontier is always a bare snapshot/materialization scan (robots
-                # gating already happened on each row's entry), so its count comes
-                # straight from parquet footers — no Spark job. No depth check is
-                # needed: the link filter chain admits only depth <= max_depth, so
-                # the frontier can never contain a deeper row. While a snapshot
-                # commit is still in flight the footer isn't on disk yet: defer
-                # the count (the admitted==0 break covers an empty frontier).
-                if commit_thread is None:
-                    n_frontier = _parquet_rows(frontier_path, fallback=frontier)
-                elif next_frontier_upper == 0:
-                    # provably empty (no leftover, no discoveries, no retries):
-                    # skip the would-be-empty fused job entirely
-                    n_frontier = 0
-                else:
-                    n_frontier = -1  # backfilled after the commit joins
+                # the first wave's frontier count came from parquet metadata
+                # before the loop (no job); every later wave starts while the
+                # previous commit is in flight, so its count is deferred (-1)
+                # unless provably empty (no leftover, discoveries or retries).
+                # No depth check: the link filter admits depth <= max_depth.
+                if commit_thread is not None:
+                    n_frontier = 0 if next_frontier_upper == 0 else -1
                 _mark("t_frontier_agg")
                 if n_frontier == 0 or crawled >= cfg.max_pages:
                     _join_commit()
@@ -784,25 +786,13 @@ class FrontierEngine:
                 ).withColumn("wave", F.lit(wave))
                 _mark("t_admission")
 
-                # ---- admission + "fetch" (join materialized latest pages) +
-                # extraction + results: ONE write job per wave. The admitted
-                # view is re-derived from the written results parquet (every
-                # admitted row appears exactly once — the pages view is unique
-                # by url_canon), so the old separate admitted.parquet write and
-                # the meta⋈extracted url join are both gone.
+                # ---- admission + fetch + extraction + results: ONE write job
+                # per wave. The admitted view is re-derived from the results
+                # parquet (_fetch keeps one row per admitted url).
                 wave_dir = os.path.join(self.out_dir, f"wave={wave:05d}")
-                # fetch = pages ⋈ admitted as a right outer join: every
-                # admitted url once, html null on fetch miss. A right outer
-                # join can only build its hash on the left side, so the
-                # broadcast hint on admitted is not taken: Spark broadcasts
-                # the PAGES side while its size estimate is under
-                # autoBroadcastJoinThreshold and streams admitted; above it
-                # the join is sort-merge (ROADMAP item 4).
-                fetched = self.pages.join(
-                    F.broadcast(admitted), "url_canon", "right"
-                )
                 fetched = (
-                    fetched.withColumn("status_code", fetch_status)
+                    self._fetch(admitted)
+                    .withColumn("status_code", fetch_status)
                     .withColumn("_do_extract", F.col("status_code") == 200)
                 )
                 # parallelism hint from the known frontier size: a 6-url wave
@@ -811,10 +801,9 @@ class FrontierEngine:
                 # (during an overlapped commit the exact count is deferred;
                 # the previous wave's driver-side upper bound stands in).
                 # extract_pages_with_meta reads the fetch frame's width from
-                # its plan without running it: one partition while the pages
-                # side is broadcast (admission_order makes admitted one
-                # partition), the shuffle-partition count when the join is
-                # sort-merge.
+                # its plan without running it (see _fetch): one partition
+                # while the captures are broadcast (admitted is one
+                # partition), the shuffle-partition count when sort-merge.
                 size_hint = n_frontier if n_frontier >= 0 else next_frontier_upper
                 par_hint = None
                 if size_hint > 0:
@@ -878,92 +867,105 @@ class FrontierEngine:
                         os.path.join(wave_dir, "moments_payload.parquet"))
                 _mark("t_fetch_extract")
 
-                # ---- link discovery (hrefs already canonical from the kernel)
-                links = (
-                    results.select(
-                        F.col("url").alias("parent_url"),
-                        F.col("depth").alias("parent_depth"),
-                        *parent_cols,
-                        F.posexplode_outer("links").alias("link_pos", "link"),
-                    )
-                    .where(F.col("link").isNotNull())
-                    .select(
-                        "parent_url",
-                        "parent_depth",
-                        "link_pos",
-                        *(["parent_terms", "parent_host"] if parent_cols else []),
-                        F.col("link.href").alias("href"),
-                        F.col("link.text").alias("text"),
-                        F.col("link.title").alias("title"),
-                        F.col("link.base_domain").alias("registrable_domain"),
-                        F.col("link.is_internal").alias("is_internal"),
-                    )
-                )
-                links = self._score_links(links, link_score_cols)
-                cand = links.select(
-                    F.col("href").alias("url_canon"),
-                    F.xxhash64("href").alias("url_hash"),
-                    "registrable_domain",
-                    "parent_url",
-                    (F.col("parent_depth") + 1).alias("depth"),
-                    "score",
-                    F.lit(wave + 1).alias("discovered_wave"),
-                    "link_pos",
-                    F.lit(0).alias("retry_count"),
-                    "is_internal",
-                )
-                cand = (
-                    cand.where(link_filter)
-                    .withColumn("_rn", F.row_number().over(link_winner))
-                    .where(F.col("_rn") == 1)
-                    .drop("_rn", "is_internal")
-                )
-                # bloom pre-filter (cheap) then EXACT anti-join (invariant).
-                # While the seen set is still small (footer-count scalar — no
-                # job) the exact anti-join alone is cheaper than the extra
-                # cogrouped python stage, so the prefilter only engages once
-                # the seen set is big enough to pay for it; the bloom itself is
-                # ALWAYS maintained (adds below) so engagement is seamless and
-                # the snapshot invariant (bloom covers seen) holds throughout.
-                import glob as _glob
-
-                n_seen, seen_small_proven = 0, True
-                for p in seen_paths:
-                    if not _glob.glob(os.path.join(p, "*.parquet")):
-                        seen_small_proven = False  # remote fs: assume big
-                        break
-                    n_seen += _parquet_rows(p)
-                if bloom is not None and (
-                    not seen_small_proven or n_seen >= cfg.bloom_min_seen
-                ):
-                    cand = bloom.prefilter(cand)
-                    maybe = cand.where(F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
-                    fresh = cand.where(~F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
-                    new_links = fresh.unionByName(filter_unseen_exact(
-                        maybe, _seen_union(spark, seen_paths)))
+                # ---- link discovery (hrefs already canonical from the kernel).
+                # Every candidate sits one level below its parent page, so when
+                # the wave's shallowest page is already at max_depth (footer
+                # statistics, no job) the filter chain's depth predicate drops
+                # them all: a depth-exhausted wave (every crawl's last) builds
+                # no link plan, writes no delta and adds nothing to seen.
+                min_depth = _parquet_min(results_path, "depth")
+                if min_depth is not None and min_depth >= cfg.max_depth:
+                    new_links, n_new = None, 0
                 else:
-                    new_links = filter_unseen_exact(
-                        cand, _seen_union(spark, seen_paths))
-                # robots verdict computed HERE, once, as a stored column of
-                # the materialized delta: the lazy next_frontier plan is
-                # executed twice (async snapshot commit + the next wave's
-                # admission job), so a gate-as-filter on the delta would run
-                # the broadcast join + pandas-UDF rule matcher twice per
-                # wave. Blocked urls still enter seen (oracle semantics) —
-                # they are dropped from the FRONTIER below by filtering on
-                # the stored flag, a plain parquet-column predicate.
-                if cfg.check_robots and self.robots is not None:
-                    new_links = robots_mark(new_links, self.robots)
-                # materialize the discovery Δ ONCE: it becomes a frontier input,
-                # a seen-set delta, AND the wave discovery log — the link chain
-                # (explode -> score -> window dedup -> bloom applyInPandas ->
-                # anti-join) runs exactly once per wave.
-                new_links_path = os.path.join(wave_dir, "new_links.parquet")
-                spark.sparkContext.setJobDescription(
-                    f"wave {wave}: link discovery (explode+score+dedup+antijoin)")
-                new_links = _write_read(new_links, new_links_path)
-                spark.sparkContext.setJobDescription(None)
-                n_new = _parquet_rows(new_links_path, fallback=new_links)  # footer-only
+                    links = (
+                        results.select(
+                            F.col("url").alias("parent_url"),
+                            F.col("depth").alias("parent_depth"),
+                            *parent_cols,
+                            F.posexplode_outer("links").alias("link_pos", "link"),
+                        )
+                        .where(F.col("link").isNotNull())
+                        .select(
+                            "parent_url",
+                            "parent_depth",
+                            "link_pos",
+                            *(["parent_terms", "parent_host"] if parent_cols else []),
+                            F.col("link.href").alias("href"),
+                            F.col("link.text").alias("text"),
+                            F.col("link.title").alias("title"),
+                            F.col("link.base_domain").alias("registrable_domain"),
+                            F.col("link.is_internal").alias("is_internal"),
+                        )
+                    )
+                    links = self._score_links(links, link_score_cols)
+                    cand = links.select(
+                        F.col("href").alias("url_canon"),
+                        F.xxhash64("href").alias("url_hash"),
+                        "registrable_domain",
+                        "parent_url",
+                        (F.col("parent_depth") + 1).alias("depth"),
+                        "score",
+                        F.lit(wave + 1).alias("discovered_wave"),
+                        "link_pos",
+                        F.lit(0).alias("retry_count"),
+                        "is_internal",
+                    )
+                    cand = (
+                        cand.where(link_filter)
+                        .withColumn("_rn", F.row_number().over(link_winner))
+                        .where(F.col("_rn") == 1)
+                        .drop("_rn", "is_internal")
+                    )
+                    # bloom pre-filter (cheap) then EXACT anti-join (invariant).
+                    # The prefilter's cogrouped python stage only pays once the
+                    # seen set (footer count, no job) reaches bloom_min_seen;
+                    # the bloom is always maintained, so snapshots' blooms
+                    # cover seen. Wave 0 runs the exact anti-join alone: until
+                    # its commit folds the seeds in, a seed would be a bloom
+                    # false negative and bypass the exact check.
+                    use_prefilter = bloom is not None and bloom_pending is None
+                    if use_prefilter:
+                        import glob as _glob
+
+                        n_seen = 0
+                        for p in seen_paths:
+                            if not _glob.glob(os.path.join(p, "*.parquet")):
+                                break  # remote fs: assume big
+                            n_seen += _parquet_rows(p)
+                        else:
+                            use_prefilter = n_seen >= cfg.bloom_min_seen
+                    if use_prefilter:
+                        cand = bloom.prefilter(cand)
+                        maybe = cand.where(F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
+                        fresh = cand.where(~F.col("bloom_maybe_seen")).drop("bloom_maybe_seen")
+                        new_links = fresh.unionByName(filter_unseen_exact(
+                            maybe, _seen_union(spark, seen_paths)))
+                    else:
+                        new_links = filter_unseen_exact(
+                            cand, _seen_union(spark, seen_paths))
+                    # robots verdict computed HERE, once, as a stored column: the
+                    # lazy next_frontier runs twice (commit + next admission),
+                    # and a gate-as-filter would run the rule matcher twice.
+                    # Blocked urls still enter seen (oracle semantics); the
+                    # frontier drops them by the stored flag.
+                    if cfg.check_robots and self.robots is not None:
+                        new_links = robots_mark(new_links, self.robots)
+                    # materialize the discovery Δ ONCE: frontier input, seen
+                    # delta and discovery log — the link chain runs once.
+                    new_links_path = os.path.join(wave_dir, "new_links.parquet")
+                    spark.sparkContext.setJobDescription(
+                        f"wave {wave}: link discovery (explode+score+dedup+antijoin)")
+                    new_links = _write_read(new_links, new_links_path)
+                    spark.sparkContext.setJobDescription(None)
+                    n_new = _parquet_rows(new_links_path, fallback=new_links)  # footer-only
+                    seen_paths.append(new_links_path)  # append-only seen delta
+                    if len(seen_paths) >= cfg.seen_compact_every:
+                        compact = os.path.join(
+                            self.checkpoint_dir, "_state", f"seen_compact_{wave:05d}"
+                        )
+                        _seen_union(spark, seen_paths).write.mode(
+                            "overwrite").parquet(compact)
+                        seen_paths = [compact]
 
                 # ---- next frontier + state folds, each written exactly once via
                 # the snapshot (the Iceberg-MERGE-per-wave pattern). The robots
@@ -983,8 +985,8 @@ class FrontierEngine:
                     ).write.mode("overwrite").parquet(
                         os.path.join(wave_dir, "hll_hosts.parquet"))
 
-                delta = new_links
-                if cfg.trap_guard_min_urls is not None:
+                delta = new_links  # None: the wave discovered nothing
+                if delta is not None and cfg.trap_guard_min_urls is not None:
                     # mine exploding (host, template) families from the
                     # accumulated O(Δ) count deltas; flagged families never
                     # enter the frontier (they stay in seen — discovered,
@@ -1022,7 +1024,7 @@ class FrontierEngine:
                         )
                         delta = filter_trapped_urls(
                             delta, mined, url_col="url_canon")
-                if cfg.check_robots and self.robots is not None:
+                if delta is not None and cfg.check_robots and self.robots is not None:
                     # verdict was computed at delta-write time (robots_mark
                     # above): the frontier gate is now a stored-column filter
                     delta = delta.where(F.col("robots_allowed"))
@@ -1046,9 +1048,10 @@ class FrontierEngine:
                     leftover = frontier.join(
                         admitted.select("url_canon"), "url_canon", "left_anti"
                     )
-                next_frontier = leftover.select(*frontier_cols).unionByName(
-                    delta.select(*frontier_cols)
-                )
+                next_frontier = leftover.select(*frontier_cols)
+                if delta is not None:
+                    next_frontier = next_frontier.unionByName(
+                        delta.select(*frontier_cols))
                 # retry/requeue (dispatcher parity, async_dispatcher.py:289-331):
                 # transient statuses re-enter the frontier with retry_count+1
                 # until max_retries; the backoff fold below shrinks their
@@ -1067,14 +1070,6 @@ class FrontierEngine:
                 next_frontier_upper = (
                     max(0, n_frontier - n_admitted) + n_new + n_transient
                 )
-                seen_paths.append(new_links_path)  # append-only seen delta
-                if len(seen_paths) >= cfg.seen_compact_every:
-                    compact = os.path.join(
-                        self.checkpoint_dir, "_state", f"seen_compact_{wave:05d}"
-                    )
-                    _seen_union(spark, seen_paths).write.mode(
-                        "overwrite").parquet(compact)
-                    seen_paths = [compact]
                 next_host_state = fold_wave_outcomes(
                     host_state,
                     results.select("registrable_domain", "status_code"),
@@ -1120,15 +1115,20 @@ class FrontierEngine:
                     F.sum(F.coalesce("extract_ms", F.lit(0.0))).alias("extract_ms"),
                     F.max("order_in_wave").alias("max_order_in_wave"),
                 )
-                # the new links fold into the bloom ON THE COMMIT THREAD,
-                # before the snapshot manifest lands (see _commit_target):
-                # the snapshot bloom must cover everything in the snapshot
-                # seen table — a bloom false NEGATIVE bypasses the exact
-                # anti-join (the `fresh` path), so a resume from a bloom
-                # that lags `seen` by one wave could re-admit already-seen
-                # urls. Deferring the fold off the driver thread hides its
-                # ~0.5 s (shuffle + python stage + state write) behind the
-                # next wave's dominant job.
+                # the new links (on wave 0, with the seeds) fold into the
+                # bloom ON THE COMMIT THREAD, before the snapshot manifest
+                # lands (see _commit_target): a bloom false NEGATIVE bypasses
+                # the exact anti-join, so a snapshot bloom lagging its seen
+                # set could re-admit seen urls on resume. Off the driver
+                # thread, the fold hides behind the next wave's job. Nothing
+                # discovered (every crawl's last wave): nothing to fold.
+                bloom_delta = bloom_pending
+                if bloom is not None and n_new > 0:
+                    # parquet-backed scans: safe on the commit thread
+                    hashes = new_links.select("url_hash")
+                    bloom_delta = (hashes if bloom_delta is None
+                                   else bloom_delta.unionByName(hashes))
+                bloom_pending = None
                 # snapshot commit runs CONCURRENTLY with the next wave's
                 # admission+extract job (joined right after that wave's results
                 # land). next_frontier/next_host_state read only already-
@@ -1150,13 +1150,7 @@ class FrontierEngine:
                         },
                     ),
                     kwargs={
-                        # parquet-backed scan of the already-written delta —
-                        # safe to execute from the commit thread. A wave that
-                        # discovered nothing (every crawl's last) skips the
-                        # fold: the current state already covers seen.
-                        "bloom_delta": (new_links.select("url_hash")
-                                        if bloom is not None and n_new > 0
-                                        else None),
+                        "bloom_delta": bloom_delta,
                         "meta": {
                             "pages_crawled": crawled,
                             "stats": _copy.deepcopy(stats),
@@ -1285,12 +1279,10 @@ class FrontierEngine:
 
     def update_pages(self, new_pages: DataFrame) -> None:
         """Set/swap the web capture (also the __init__ path, so the column
-        setup lives exactly once): subsequent runs fetch against it. The
-        latest-view materialization is re-derived under an epoch-versioned
-        name so a prior run's plan can never read a half-overwritten table;
-        copies older than the PREVIOUS epoch are reclaimed (a long-lived
-        recrawl loop must not accrete a full copy of the web per epoch)."""
-        from ..kernel import hfs
+        setup lives exactly once): subsequent runs fetch against it. Nothing
+        is copied: each wave's fetch joins the raw captures (``_fetch``),
+        and ``self.pages`` is the lazy latest-capture view the recrawl diff
+        and the link-preview peek read."""
         from ..sources.pages import latest_pages
 
         # an optional status_code column in the pages table simulates
@@ -1298,18 +1290,10 @@ class FrontierEngine:
         page_cols = [F.col("url").alias("url_canon"), "html", "warc_ts", "lang"]
         if "status_code" in new_pages.columns:
             page_cols.append(F.col("status_code").alias("_page_status"))
-        # a NULL-url capture can never be fetched (the fetch joins on url)
-        # and would pass run()'s uniqueness probe as a one-row group: drop
-        # it at ingest so the probe and the latest-capture view agree
-        new_pages = new_pages.where(F.col("url").isNotNull())
-        self._pages_input = new_pages
-        self._page_cols = page_cols
-        self.pages = latest_pages(new_pages).select(*page_cols)
-        self._pages_epoch += 1
-        self._pages_materialized = False
-        for old in range(self._pages_epoch - 1):  # keep current + previous
-            hfs.delete(self.spark, os.path.join(
-                self.checkpoint_dir, "_state", f"pages_latest_{old}"))
+        # a NULL-url capture can never be fetched (the fetch joins on url):
+        # drop it at ingest so it never becomes a latest-view row
+        self._captures = new_pages.where(F.col("url").isNotNull()).select(*page_cols)
+        self.pages = latest_pages(self._captures, key="url_canon")
 
     def schedule_recrawl(self, new_pages: DataFrame) -> dict:
         """Close the re-crawl loop at engine level (the reference's digest

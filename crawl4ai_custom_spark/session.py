@@ -28,6 +28,7 @@ def get_spark(
         master = f"local[{cpus}]"
     if shuffle_partitions is None:
         shuffle_partitions = int(os.environ.get("SPARK_GRAFT_SHUFFLE", "32"))
+    phys = os.sysconf("SC_PAGE_SIZE") * os.sysconf("SC_PHYS_PAGES")
 
     b = (
         SparkSession.builder.appName(app_name)
@@ -41,7 +42,9 @@ def get_spark(
         .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
         .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
-        .config("spark.driver.memory", os.environ.get("SPARK_GRAFT_DRIVER_MEM", "24g"))
+        # default heap: half the machine's memory, capped at 24g
+        .config("spark.driver.memory", os.environ.get(
+            "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(24, phys // 2**31))}g"))
         # ParallelGC: ~2x on wide-row Arrow pipelines vs default G1 in
         # local mode (high allocation rate from 10-100KB string columns)
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")

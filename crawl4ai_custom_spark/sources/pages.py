@@ -6,10 +6,13 @@ url is a join against this table. A url can have multiple captures
 the as-of operator of this engine, cf. SURVEY.md §2.1 "Playwright page
 fetch" mapping).
 
-Scale notes: the window shuffles on url — at 10^10 rows this is the big
-shuffle, so production tables should be bucketed/partitioned by
-``xxhash64(url)`` (Iceberg bucket(N, url)) letting the window run
-shuffle-free per bucket; with AQE on, local mode coalesces automatically.
+The crawl wave engine keeps no copy of this view: each wave joins the raw
+captures to its admitted urls first and takes the latest capture per
+admitted url after the join, so the window runs over the wave's rows on
+the join's own partitioning (no extra shuffle). Over a whole table the
+window shuffles on url — at 10^10 rows that is the big shuffle, so
+production tables should be bucketed/partitioned by ``xxhash64(url)``
+(Iceberg bucket(N, url)) letting it run shuffle-free per bucket.
 """
 
 from __future__ import annotations
@@ -27,9 +30,9 @@ def load_pages(spark: SparkSession, path_or_dir: str) -> DataFrame:
     return spark.read.parquet(p)
 
 
-def latest_pages(pages: DataFrame) -> DataFrame:
-    """One row per url: the capture with max warc_ts (ties: first)."""
-    w = Window.partitionBy("url").orderBy(F.desc("warc_ts"))
+def latest_pages(pages: DataFrame, key: str = "url") -> DataFrame:
+    """One row per ``key``: the capture with max warc_ts (ties: first)."""
+    w = Window.partitionBy(key).orderBy(F.desc("warc_ts"))
     return (
         pages.withColumn("_rn", F.row_number().over(w))
         .where(F.col("_rn") == 1)

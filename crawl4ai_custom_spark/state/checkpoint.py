@@ -8,8 +8,9 @@ Iceberg-style snapshot directory per wave:
     <root>/wave=<k>/_MANIFEST.json        (written LAST -> commit marker)
 
 The seen set is NOT a table here: it is the union of immutable delta files
-(seed frontier + each wave's new_links parquet), listed in the manifest
-meta as ``seen_deltas`` — append-only, so per-wave state IO stays O(Δ).
+(the seeds + each discovering wave's new_links parquet), listed in the
+manifest meta as ``seen_deltas`` — append-only, so per-wave state IO stays
+O(Δ).
 
 A snapshot is only visible once its manifest exists, giving the same
 atomic-commit semantics Iceberg snapshots provide (on a real deployment this

@@ -116,9 +116,74 @@ def main() -> None:
         [(r"BroadcastHashJoin", "robots table is tiny; frontier side never moves")],
     )
 
+    # 5. the crawl wave's real fetch frame: raw captures ⋈ admitted, then
+    # the latest capture per admitted url (FrontierEngine._fetch on a wave
+    # admitted the engine's way — one partition, ordered by row_number)
+    from pyspark.sql import Window
+
+    from crawl4ai_custom_spark.operators.frontier import CrawlConfig, FrontierEngine
+
+    eng = FrontierEngine(spark, pages, robots, CrawlConfig(),
+                         checkpoint_dir=tempfile.mkdtemp(prefix="audit_ck_"),
+                         out_dir=tempfile.mkdtemp(prefix="audit_out_"))
+    seeds = [r["url"] for r in
+             spark.read.parquet(os.path.join(site, "seeds.parquet")).collect()]
+    wave = eng._admit_wave(eng._seed_frontier(seeds), host_state, 100).withColumn(
+        "order_in_wave", F.row_number().over(Window.orderBy(*eng._admission_order())))
+
+    def fetch_audit(title: str, check_html: bool) -> None:
+        """Walks the physical plan: the nodes between the latest-capture
+        Window and the fetch join, and every shuffle's output columns."""
+        df = eng._fetch(wave)
+        plan = df._jdf.queryExecution().executedPlan()
+        if plan.nodeName() == "AdaptiveSparkPlan":
+            plan = plan.executedPlan()
+
+        def kids(n):
+            c = n.children()
+            return [c.apply(i) for i in range(c.size())]
+
+        node, between = plan, []
+        while node.nodeName() != "Window":
+            node = kids(node)[0]
+        while "Join" not in node.nodeName():
+            node = kids(node)[0]
+            between.append(node.nodeName())
+        shuffles_html, stack = False, [plan]
+        while stack:
+            n = stack.pop()
+            stack.extend(kids(n))
+            out = n.output()
+            shuffles_html |= n.nodeName() == "Exchange" and any(
+                out.apply(i).name() == "html" for i in range(out.size()))
+        checks = [(not any("Exchange" in b for b in between),
+                   "no Exchange between fetch join and latest-capture Window",
+                   "the window keys on url_canon, which the join's output "
+                   "already satisfies (one partition when the captures are "
+                   f"broadcast, hash(url_canon) when sort-merge): {between}")]
+        if check_html:
+            checks.append((not shuffles_html, "html side never shuffled",
+                           "the captures side is broadcast and the one-partition "
+                           "wave is streamed; no shuffle carries html"))
+        rows = []
+        for ok, label, why in checks:
+            rows.append((("PASS  " if ok else "FAIL  ") + label, why))
+            if not ok:
+                failures.append(f"{title}: {label}")
+        sections.append((title, plan_of(df), rows))
+
+    fetch_audit("Crawl wave fetch — captures broadcast, latest capture without "
+                "a shuffle", check_html=True)
+
     # every plan below is audited with automatic broadcast off: a broadcast
     # the plans rely on must come from an explicit hint
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")
+
+    # 5b. the same fetch once the captures are past the broadcast threshold:
+    # the join is sort-merge (the html side shuffles — ROADMAP item 2) and
+    # the latest-capture window still adds no Exchange of its own
+    fetch_audit("Crawl wave fetch — sort-merge join, latest capture without "
+                "a shuffle", check_html=False)
 
     # 6. salted mega-host admission: two-stage top-k (north rule's explicit
     # skew splitting) — stage 1 windows on (domain, salt) so no single task

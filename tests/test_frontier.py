@@ -667,9 +667,10 @@ def test_run_builds_no_rdd_and_final_bloom_covers_seen(
       - the NULL-url row is dropped at ingest (never a pages-view row);
       - no DataFrame.rdd is built (it would run the wave plan's stages
         once before the real job);
-      - the last wave discovers nothing, so its commit skips the bloom
-        fold (seed fold + wave-0 fold only), and the final snapshot's
-        bloom still covers every url in its seen set."""
+      - the seeds fold into the bloom with wave 0's links on wave 0's
+        commit, and the last wave discovers nothing, so its commit skips
+        the bloom fold (one fold in all); the final snapshot's bloom
+        still covers every url in its seen set."""
     from crawl4ai_custom_spark.operators.seen import PartitionedBloom
 
     pages = pages_df.unionByName(
@@ -698,7 +699,7 @@ def test_run_builds_no_rdd_and_final_bloom_covers_seen(
 
     assert eng.pages.where(F.col("url_canon").isNull()).count() == 0
     assert [s["new_links"] > 0 for s in run.stats] == [True, False]
-    assert len(folds) == 2
+    assert len(folds) == 1
     _assert_snapshot_bloom_covers_seen(spark, eng, str(tmp_path / "bloom"))
 
 
@@ -758,6 +759,101 @@ def test_saturated_bloom_crawl_equals_exact_crawl(
         F.xxhash64(F.concat(F.lit("never-"), F.col("id"))).alias("url_hash"))
     assert bloom.prefilter(probe).where(
         F.col("bloom_maybe_seen")).count() > 900
+    _assert_snapshot_bloom_covers_seen(spark, eng, str(tmp_path / "bloom"))
+
+
+def test_depth_exhausted_wave_skips_link_discovery(
+        spark, pages_df, robots_df, tmp_path):
+    """Every page of a depth-1 crawl's wave 1 sits at max_depth, so every
+    link it holds fails the depth filter: the wave starts no link-discovery
+    job and writes no discovery delta."""
+    import os
+    import uuid
+
+    cfg = CrawlConfig(strategy="bfs", max_depth=1, max_pages=500,
+                      politeness=PolitenessConfig(wave_seconds=1e9),
+                      use_bloom=True, bloom_partitions=4)
+    eng = FrontierEngine(spark, pages_df, robots_df, cfg,
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         out_dir=str(tmp_path / "out"))
+    sc = spark.sparkContext
+    gid = f"depth-exhausted-{uuid.uuid4().hex}"
+    sc.setJobGroup(gid, "depth-exhausted crawl")
+    try:
+        run = eng.run(SEEDS[:2])
+    finally:
+        sc.setLocalProperty("spark.jobGroup.id", None)
+        sc.setLocalProperty("spark.job.description", None)
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    store = sc._jsc.sc().statusStore()
+    descs = []
+    for job_id in sc.statusTracker().getJobIdsForGroup(gid):
+        d = store.job(job_id).description()
+        descs.append(d.get() if d.isDefined() else "")
+    assert any(d.startswith("wave 0: link discovery") for d in descs), descs
+    assert not any(d.startswith("wave 1: link discovery") for d in descs)
+    assert os.path.isdir(os.path.join(run.results_dir, "wave=00000",
+                                      "new_links.parquet"))
+    assert not os.path.exists(os.path.join(run.results_dir, "wave=00001",
+                                           "new_links.parquet"))
+    assert [s["new_links"] > 0 for s in run.stats] == [True, False]
+
+
+def test_fetch_takes_latest_capture_and_keeps_every_miss(
+        bfs_run, spark, site_dir, pages_df, tmp_path):
+    """The fetch joins the raw captures and keeps the latest capture per
+    admitted url: a url with an older capture is extracted from its newest
+    html, and several fetch misses admitted in one wave each get their own
+    404 row in that wave (a window keyed on the captures' url would fold
+    every miss into one NULL group and push the rest to later waves)."""
+    run, _ = bfs_run
+    caps = duckdb.sql(f"""
+        select url, octet_length(html) as n, warc_ts,
+               count(*) over (partition by url) as n_caps,
+               row_number() over (partition by url
+                                  order by warc_ts desc) as rn
+        from '{site_dir}/pages.parquet'
+    """).df()
+    multi = caps[caps.n_caps >= 2]
+    latest = dict(zip(multi[multi.rn == 1].url, multi[multi.rn == 1].n))
+    older = dict(zip(multi[multi.rn > 1].url, multi[multi.rn > 1].n))
+    got = {r["url"]: r["html_bytes"] for r in run.results(spark)
+           .where(F.col("url").isin(list(latest))).collect()}
+    assert any(older[u] != latest[u] for u in got), got
+    assert got == {u: latest[u] for u in got}
+    assert run.results(spark).groupBy("url").count().where(
+        F.col("count") > 1).count() == 0
+
+    misses = ["https://mega.example-shop.com/missing/a",
+              "https://mega.example-shop.com/missing/b",
+              "https://shop1.example1.com/missing/c"]
+    cfg = CrawlConfig(strategy="bfs", max_depth=0, max_pages=10,
+                      politeness=PolitenessConfig(wave_seconds=1e9),
+                      check_robots=False, use_bloom=False)
+    eng = FrontierEngine(spark, pages_df, None, cfg,
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         out_dir=str(tmp_path / "out"))
+    rows = eng.run(misses + [SEEDS[0]]).results(spark).select(
+        "url", "status_code", "wave").collect()
+    assert sorted((r["url"], r["status_code"], r["wave"]) for r in rows) == sorted(
+        [(u, 404, 0) for u in misses] + [(SEEDS[0], 200, 0)])
+
+
+def test_first_wave_snapshot_bloom_covers_seeds(
+        spark, pages_df, robots_df, tmp_path):
+    """The seeds fold into the bloom on wave 0's commit, before its
+    manifest lands: a crawl stopped after one wave leaves a snapshot whose
+    bloom covers the whole seen set, seeds included."""
+    cfg = CrawlConfig(strategy="bfs", max_depth=2, max_pages=500,
+                      max_waves=1, politeness=PolitenessConfig(wave_seconds=1e9),
+                      use_bloom=True, bloom_partitions=4)
+    eng = FrontierEngine(spark, pages_df, robots_df, cfg,
+                         checkpoint_dir=str(tmp_path / "ckpt"),
+                         out_dir=str(tmp_path / "out"))
+    run = eng.run(SEEDS)
+    assert run.waves == 1 and eng.store.latest_wave() == 0
+    seen_deltas = eng.store.read(0)["_meta"]["seen_deltas"]
+    assert any(p.endswith("seeds_all") for p in seen_deltas)
     _assert_snapshot_bloom_covers_seen(spark, eng, str(tmp_path / "bloom"))
 
 

@@ -225,9 +225,23 @@ def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
     from crawl4ai_custom_spark.operators.nndescent import (
         graph_ann_search, nn_descent)
 
-    fast = nn_descent(clustered, k=4, rounds=2, n_planes=4)
+    # the corpus is past the default gate: size the gate to the corpus so
+    # the driver twin really builds `fast`
+    n = clustered.count()
+    twin_calls = []
+    local_knn_graph = nndescent._local_knn_graph
+
+    def counting_twin(*args, **kwargs):
+        twin_calls.append(1)
+        return local_knn_graph(*args, **kwargs)
+
+    monkeypatch.setattr(nndescent, "_local_knn_graph", counting_twin)
+    fast = nn_descent(clustered, k=4, rounds=2, n_planes=4,
+                      driver_max_vectors=n)
+    assert twin_calls == [1]
     slow = nn_descent(clustered, k=4, rounds=2, n_planes=4,
                       driver_max_vectors=0)
+    assert twin_calls == [1]
     assert sorted(map(tuple, fast.collect())) == \
         sorted(map(tuple, slow.collect()))
 
@@ -241,7 +255,6 @@ def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
 
     # a bound the corpus fits: few queries take the driver twin, queries
     # past the bound are never collected and run distributed
-    n = clustered.count()
     g_local = graph_ann_search(fast, clustered, queries, k=4, beam=8,
                                rounds=2, n_entry=6, driver_max_vectors=n)
     assert sorted(map(tuple, g_local.collect())) == \

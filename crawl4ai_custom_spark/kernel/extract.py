@@ -48,6 +48,17 @@ class ExtractConfig:
     citations: bool = True
 
 
+def failed_page(url: str) -> dict[str, Any]:
+    """The row of a page the kernel could not extract: success False,
+    every extracted field empty."""
+    return {
+        "url": url, "success": False, "cleaned_html": "", "text": "",
+        "title": "", "raw_markdown": "", "markdown_with_citations": "",
+        "references_markdown": "", "fit_markdown": "", "fit_html": "",
+        "links": [], "images": [], "tables": [], "metadata": {},
+    }
+
+
 def extract_page(
     url: str, html: bytes | str, cfg: ExtractConfig | None = None
 ) -> dict[str, Any]:
@@ -58,12 +69,7 @@ def extract_page(
     fit_html = fit_html_for_page(html, tree=raw_tree) if cfg.schema_fit_html else ""
     sr = scrap(url, raw_tree if raw_tree is not None else html, cfg.scrape)
     if not sr.success:
-        return {
-            "url": url, "success": False, "cleaned_html": "", "text": "",
-            "title": "", "raw_markdown": "", "markdown_with_citations": "",
-            "references_markdown": "", "fit_markdown": "", "fit_html": "",
-            "links": [], "images": [], "tables": [], "metadata": {},
-        }
+        return failed_page(url)
 
     # one DOM for the whole downstream: markdown walks the cleaned tree
     # scrap() built (no re-parse); the content filter then consumes that

@@ -92,17 +92,18 @@ _MERGE_SCHEMA = StructType([
 ])
 
 
-def _merge_table(spark, merges: list) -> DataFrame:
+def _merge_table(spark, merges: list, wordpiece: bool = False) -> DataFrame:
+    """(rank, left, right, merged) rows; a WordPiece merge drops the
+    right piece's "##" continuation prefix."""
     from ..session import local_df
 
-    return local_df(
-        spark, [(r, l, rt, l + rt) for r, l, rt in merges], _MERGE_SCHEMA
-    )
+    return local_df(spark, [
+        (r, l, rt, l + (rt[2:] if wordpiece and rt.startswith("##") else rt))
+        for r, l, rt in merges], _MERGE_SCHEMA)
 
 
 def train_bpe(docs: DataFrame, n_merges: int, text_col: str = "text",
-              checkpoint_dir: str | None = None,
-              driver_max_vocab: int = 100_000) -> DataFrame:
+              checkpoint_dir: str | None = None) -> DataFrame:
     """Learn ``n_merges`` BPE merges from the corpus; returns the ordered
     merge table (rank, left, right, merged) — rank is application order.
 
@@ -114,27 +115,28 @@ def train_bpe(docs: DataFrame, n_merges: int, text_col: str = "text",
     Training stops early if no pair occurs twice (nothing left to merge).
 
     Small-vocab fast path (the cluster_pairs pattern): when the word vocab
-    holds at most ``driver_max_vocab`` rows (known free from the parquet
-    footers after the one materialization that happens anyway), the merge
+    passes the linear small-input gate (``session.collect_if_small``,
+    read from the one materialization that happens anyway), the merge
     loop runs driver-side over the collected (word, n) table — the vocab
-    IS the algorithm's working set, so a 100k-word corpus is a few MB.
+    IS the algorithm's working set, so a 200k-word corpus is a few MB.
     Web-scale vocabularies exceed the gate and take the distributed
     per-round loop unchanged; both paths are asserted identical in
     tests/test_bpe.py.
     """
+    from ..session import LINEAR_MAX_ROWS, collect_if_small
+
     spark = docs.sparkSession
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="bpe_")
 
-    # materialize the vocab ONCE, then the row count comes from parquet
-    # footers (no second pass over the corpus aggregation) and both paths
-    # read the materialized table
+    # materialize the vocab ONCE (no second pass over the corpus
+    # aggregation); both paths read the materialized table
     path = os.path.join(ckpt, "vocab_0")
     _word_vocab(docs, text_col).write.mode("overwrite").parquet(path)
     vocab = spark.read.parquet(path)
 
     merges: list[tuple[int, str, str]] = []
-    if vocab.count() <= driver_max_vocab:  # footer count, no data scan
-        rows = vocab.select("word", "n").collect()
+    rows = collect_if_small(vocab.select("word", "n"), LINEAR_MAX_ROWS)
+    if rows is not None:
         words = {r["word"]: (list(r["word"]) + [END], int(r["n"]))
                  for r in rows}
         for r in range(n_merges):
@@ -515,8 +517,7 @@ def _wp_merge_once(left: str, right: str, syms: list) -> list:
 
 
 def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
-                    checkpoint_dir: str | None = None,
-                    driver_max_vocab: int = 100_000) -> DataFrame:
+                    checkpoint_dir: str | None = None) -> DataFrame:
     """Learn ``n_merges`` WordPiece merges; returns (rank, left, right,
     merged) like :func:`train_bpe`. Score = c(ab)/(c(a)·c(b)) with ties on
     (left, right) ascending. IEEE division is correctly rounded, so equal
@@ -528,6 +529,8 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
     table, then per-round = one pair groupBy + one symbol groupBy (for the
     denominator counts) + a single-row top-1 collect + an Arrow rewrite of
     the vocab table, materialized each round."""
+    from ..session import LINEAR_MAX_ROWS, collect_if_small
+
     spark = docs.sparkSession
     ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="wp_")
 
@@ -545,8 +548,8 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
     vocab = spark.read.parquet(path)
 
     merges: list[tuple[int, str, str]] = []
-    if vocab.count() <= driver_max_vocab:  # footer count
-        rows = vocab.select("word", "n").collect()
+    rows = collect_if_small(vocab.select("word", "n"), LINEAR_MAX_ROWS)
+    if rows is not None:
         words = {r["word"]: (_wp_syms(r["word"]), int(r["n"]))
                  for r in rows}
         for r in range(n_merges):
@@ -571,11 +574,7 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
                 w: (_wp_merge_once(left, right, syms), n)
                 for w, (syms, n) in words.items()
             }
-        from ..session import local_df
-
-        return local_df(
-            spark, [(r, l, rt, l + (rt[2:] if rt.startswith("##") else rt))
-                    for r, l, rt in merges], _MERGE_SCHEMA)
+        return _merge_table(spark, merges, wordpiece=True)
 
     for r in range(n_merges):
         pairs = vocab.select(
@@ -621,11 +620,7 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
         nxt.write.mode("overwrite").parquet(path)
         vocab = spark.read.parquet(path)
 
-    from ..session import local_df
-
-    return local_df(
-        spark, [(r, l, rt, l + (rt[2:] if rt.startswith("##") else rt))
-                for r, l, rt in merges], _MERGE_SCHEMA)
+    return _merge_table(spark, merges, wordpiece=True)
 
 
 def wordpiece_segment(tokens: DataFrame, pieces: DataFrame,

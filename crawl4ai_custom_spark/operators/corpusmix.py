@@ -616,14 +616,14 @@ def train_langid(
 
     Small labeled sets (the common case — LID trains on a curated sample,
     not the corpus) run a bit-identical driver twin: integer md5 bucket
-    hashing and HALF_UP micro-nat rounding shared verbatim, gated by an
-    incremental limit-probe (cluster_pairs convention); the distributed
+    hashing and HALF_UP micro-nat rounding shared verbatim, gated by the
+    pairwise small-input gate (rows carry documents); the distributed
     path is unchanged and exercised above the gate."""
-    driver_max_docs = 1024
-    rows = labeled.select(
-        F.col(lang_col).cast("string"), F.col(text_col)
-    ).limit(driver_max_docs + 1).collect()
-    if len(rows) <= driver_max_docs:
+    from ..session import PAIRWISE_MAX_ROWS, collect_if_small
+
+    rows = collect_if_small(labeled.select(
+        F.col(lang_col).cast("string"), F.col(text_col)), PAIRWISE_MAX_ROWS)
+    if rows is not None:
         import hashlib
         import math
         from decimal import ROUND_HALF_UP, Decimal

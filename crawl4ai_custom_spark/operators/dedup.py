@@ -256,13 +256,32 @@ def _local_exact_jaccard_pairs(texts: dict, k: int,
     return out
 
 
-def _small_docs_probe(docs: DataFrame, id_col: str, text_col: str,
-                      max_docs: int = 256):
-    """Incremental limit-probe for the driver twins: the collected
-    (id, text) rows when the corpus fits and ids are unique, else None."""
-    rows = docs.select(F.col(id_col), F.col(text_col)) \
-        .limit(max_docs + 1).collect()
-    if len(rows) <= max_docs and len({r[0] for r in rows}) == len(rows):
+def _exact_jaccard_twin(docs: DataFrame, id_col: str, text_col: str,
+                        k: int, threshold: float):
+    """The exact-Jaccard pairs of a corpus that passes _small_docs_probe,
+    computed by the driver twin, else None."""
+    rows = _small_docs_probe(docs, id_col, text_col)
+    if rows is None:
+        return None
+    from ..session import local_df
+
+    idt = docs.select(F.col(id_col)).schema[0].dataType.simpleString()
+    return local_df(
+        docs.sparkSession,
+        _local_exact_jaccard_pairs({r[0]: r[1] for r in rows}, k, threshold),
+        f"id_a {idt}, id_b {idt}, jaccard double")
+
+
+def _small_docs_probe(docs: DataFrame, id_col: str, text_col: str):
+    """The collected (id, text) rows for the document driver twins when
+    the corpus passes the pairwise small-input gate and its ids are
+    unique, else None (duplicate-id inputs keep the distributed path,
+    whose shingle-union semantics the dict twins cannot mirror)."""
+    from ..session import PAIRWISE_MAX_ROWS, collect_if_small
+
+    rows = collect_if_small(docs.select(F.col(id_col), F.col(text_col)),
+                            PAIRWISE_MAX_ROWS)
+    if rows is not None and len({r[0] for r in rows}) == len(rows):
         return rows
     return None
 
@@ -315,12 +334,14 @@ def lsh_plan_stats(signatures: DataFrame, band_configs: list[int], *,
     pass a materialized signature table (the store) when planning over
     more than a trivial corpus."""
     # small-input driver twin: per config the dataflow pays an explode +
-    # two aggregation phases; a signature table that fits the probe
+    # two aggregation phases; a signature table that fits the gate
     # computes the same integer histogram locally (band hashing shared
     # with _local_band_hashes — bit-identical)
-    driver_max_sigs = 256
-    srows = signatures.select("id", "sig").limit(driver_max_sigs + 1).collect()
-    if len(srows) <= driver_max_sigs:
+    from ..session import PAIRWISE_MAX_ROWS, collect_if_small
+
+    srows = collect_if_small(signatures.select("id", "sig"),
+                             PAIRWISE_MAX_ROWS)
+    if srows is not None:
         from ..session import local_df
 
         rows_out = []
@@ -430,29 +451,23 @@ def minhash_lsh_dedup(
     60-72 s vs persisted 58-60 s — a wash; the crossover is near this
     scale, so ``persist_shingles=True`` is the right call for corpora
     beyond ~10^5 docs (and at 10^8+ the shingle table belongs in parquet,
-    not the MEMORY cache — materialize it yourself and pass it in)."""
-    if not persist_shingles:
-        # small-corpus driver twin (the cluster_pairs convention): the
-        # six-branch shingle/signature/band/verify dataflow costs ~10
-        # exchanges regardless of size, so corpora that fit the probe run
-        # the bit-identical integer pipeline locally. persist_shingles
-        # signals an at-scale caller -> always distributed.
-        driver_max_docs = 256
-        rows = docs.select(F.col(id_col), F.col(text_col)) \
-            .limit(driver_max_docs + 1).collect()
-        if (len(rows) <= driver_max_docs
-                and len({r[0] for r in rows}) == len(rows)):
-            # (duplicate-id inputs keep the distributed path, whose
-            # shingle-union semantics the dict twin cannot mirror)
-            from ..session import local_df
+    not the MEMORY cache — materialize it yourself and pass it in).
+    ``persist_shingles`` only caches; corpora that pass the pairwise
+    small-input gate run the driver twin either way."""
+    # small-corpus driver twin: the six-branch shingle/signature/band/
+    # verify dataflow costs ~10 exchanges regardless of size, so corpora
+    # that fit the gate run the bit-identical integer pipeline locally
+    rows = _small_docs_probe(docs, id_col, text_col)
+    if rows is not None:
+        from ..session import local_df
 
-            idt = docs.select(F.col(id_col)).schema[0].dataType.simpleString()
-            out = _local_minhash_pairs(
-                {r[0]: r[1] for r in rows}, k, num_hashes, 1, bands,
-                jaccard_threshold)
-            return local_df(
-                docs.sparkSession, out,
-                f"id_a {idt}, id_b {idt}, jaccard double")
+        idt = docs.select(F.col(id_col)).schema[0].dataType.simpleString()
+        out = _local_minhash_pairs(
+            {r[0]: r[1] for r in rows}, k, num_hashes, 1, bands,
+            jaccard_threshold)
+        return local_df(
+            docs.sparkSession, out,
+            f"id_a {idt}, id_b {idt}, jaccard double")
     sh = shingle_table(docs, id_col, text_col, k)
     if persist_shingles:
         sh = sh.persist()
@@ -927,19 +942,21 @@ def winnow_matches(fingerprints: DataFrame,
     """Document pairs sharing >= min_shared winnowing fingerprints —
     the copy-detection join over the tiny fingerprint table (~2/(w+1)
     of the gram count per doc), never the texts. Returns (id_a, id_b,
-    n_shared). Fingerprint tables under the limit-probe run the
+    n_shared). Fingerprint tables under the small-input gate run the
     pair count locally (integer set intersections — bit-identical)."""
-    probe_max, doc_max = 100_000, 512
-    rows = fingerprints.select("id", "fp_hash").limit(probe_max + 1).collect()
+    from ..session import LINEAR_MAX_ROWS, PAIRWISE_MAX_ROWS, collect_if_small
+
+    rows = collect_if_small(fingerprints.select("id", "fp_hash"),
+                            LINEAR_MAX_ROWS)
     # the local pair loop is O(docs^2): bound BOTH rows and docs, and stop
     # building the per-doc sets as soon as a doc past the bound appears
-    local = 0 < len(rows) <= probe_max
+    local = bool(rows)
     by_id: dict = {}
     if local:
         for i, h in rows:
             fps = by_id.get(i)
             if fps is None:
-                if len(by_id) == doc_max:
+                if len(by_id) == PAIRWISE_MAX_ROWS:
                     local = False
                     break
                 fps = by_id[i] = set()
@@ -980,16 +997,9 @@ def ngram_jaccard_dedup(
     as the ground-truth check of minhash_lsh_dedup). Small corpora run
     the shared driver twin (bit-identical; see
     _local_exact_jaccard_pairs)."""
-    rows = _small_docs_probe(docs, id_col, text_col)
-    if rows is not None:
-        from ..session import local_df
-
-        idt = docs.select(F.col(id_col)).schema[0].dataType.simpleString()
-        return local_df(
-            docs.sparkSession,
-            _local_exact_jaccard_pairs({r[0]: r[1] for r in rows}, k,
-                                       threshold),
-            f"id_a {idt}, id_b {idt}, jaccard double")
+    twin = _exact_jaccard_twin(docs, id_col, text_col, k, threshold)
+    if twin is not None:
+        return twin
     sh = shingle_table(docs, id_col, text_col, k)
     sa = sh.select(F.col("id").alias("id_a"), "shingle_hash")
     sb = sh.select(F.col("id").alias("id_b"), "shingle_hash")
@@ -1058,16 +1068,9 @@ def prefix_filter_dedup(
     to parquet yourself and pass ``docs`` pre-shingled instead."""
     if not 0 < threshold <= 1:
         raise ValueError(f"threshold must be in (0, 1], got {threshold}")
-    rows = _small_docs_probe(docs, id_col, text_col)
-    if rows is not None:
-        from ..session import local_df
-
-        idt = docs.select(F.col(id_col)).schema[0].dataType.simpleString()
-        return local_df(
-            docs.sparkSession,
-            _local_exact_jaccard_pairs({r[0]: r[1] for r in rows}, k,
-                                       threshold),
-            f"id_a {idt}, id_b {idt}, jaccard double")
+    twin = _exact_jaccard_twin(docs, id_col, text_col, k, threshold)
+    if twin is not None:
+        return twin
     sh = shingle_table(docs, id_col, text_col, k).localCheckpoint()
     df_tbl = sh.groupBy("shingle_hash").agg(F.count(F.lit(1)).alias("_df"))
     sizes = sh.groupBy("id").agg(F.count(F.lit(1)).alias("sz"))
@@ -1256,7 +1259,6 @@ def cluster_pairs(
     pairs: DataFrame,
     max_iters: int = 25,
     checkpoint_dir: str | None = None,
-    driver_max_edges: int = 200_000,
 ) -> DataFrame:
     """Near-dup pairs -> connected components: (id, cluster_id) where
     cluster_id = min id reachable through the pair graph (the keeper).
@@ -1274,23 +1276,22 @@ def cluster_pairs(
     (content_scraping_strategy seen-href logic) is the degenerate
     single-page case of the same keeper rule.
 
-    Small-graph fast path: when the materialized edge table holds at most
-    ``driver_max_edges`` rows (known for free from the parquet write — no
-    extra action), components come from a driver-side union-find over the
-    collected edges instead of iterative jobs. The collect is size-GATED
-    (200k edges = a few MB), so this is the bounded-scalar kind of driver
-    work, not a distributed-path regression: duplicate-pair graphs at
-    sf<=0.1 fit trivially, while a 100 TB near-dup graph exceeds the gate
-    and takes the propagation path unchanged. Same output either way —
-    the propagation's min-label fixpoint IS the union-find component
+    Small-graph fast path: when the edge table passes the linear
+    small-input gate (``session.collect_if_small``, 200k edges = a few
+    MB), components come from a driver-side union-find over the collected
+    edges instead of iterative jobs. This is the bounded-scalar kind of
+    driver work, not a distributed-path regression: duplicate-pair graphs
+    at sf<=0.1 fit trivially, while a 100 TB near-dup graph exceeds the
+    gate and takes the propagation path unchanged. Same output either way
+    — the propagation's min-label fixpoint IS the union-find component
     minimum.
     """
     import os
     import tempfile
 
-    spark = pairs.sparkSession
-    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="cc_labels_")
+    from ..session import LINEAR_MAX_ROWS, collect_if_small
 
+    spark = pairs.sparkSession
     edges = (
         pairs.select(F.col("id_a").alias("src"), F.col("id_b").alias("dst"))
         .unionByName(
@@ -1298,14 +1299,8 @@ def cluster_pairs(
         )
         .distinct()
     )
-
-    # size-gated probe: ONE incremental limit-collect decides the path
-    # (CollectLimit short-circuits, so a 10^10-edge graph only computes
-    # enough partitions to overflow the gate). The old shape paid a
-    # parquet write + re-read + count + full collect before the
-    # union-find could start — three extra jobs on the common small path.
-    sample = edges.limit(driver_max_edges + 1).collect()
-    if len(sample) <= driver_max_edges:
+    sample = collect_if_small(edges, LINEAR_MAX_ROWS)
+    if sample is not None:
         parent: dict = {}
 
         def find(x):
@@ -1336,6 +1331,7 @@ def cluster_pairs(
         return local_df(spark, rows, out_schema)
 
     # big path: materialize edges once — every round joins against this scan
+    ckpt = checkpoint_dir or tempfile.mkdtemp(prefix="cc_labels_")
     edges_path = os.path.join(ckpt, "edges")
     edges.write.mode("overwrite").parquet(edges_path)
     edges = spark.read.parquet(edges_path)

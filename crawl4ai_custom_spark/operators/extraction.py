@@ -39,7 +39,7 @@ from pyspark.sql.types import (
     StructType,
 )
 
-from ..kernel.extract import ExtractConfig, extract_page
+from ..kernel.extract import ExtractConfig, extract_page, failed_page
 
 LINK_TYPE = ArrayType(
     StructType(
@@ -106,6 +106,16 @@ EXTRACT_SCHEMA = StructType(
 _LINK_KEYS = ("href", "text", "title", "base_domain", "is_internal")
 _IMG_KEYS = ("src", "alt", "desc", "score", "format", "variants")
 _TBL_KEYS = ("headers", "rows", "caption", "summary")
+
+
+def _extract_or_fail(url: str, html: bytes, cfg: ExtractConfig) -> dict:
+    """extract_page, or the page's failure row when the kernel raises (a
+    RecursionError on a page nested thousands of elements deep, say): one
+    page must not fail its task, and with it the whole pass or wave."""
+    try:
+        return extract_page(url, html, cfg)
+    except Exception:
+        return failed_page(url)
 
 
 def _row_to_out(row: dict[str, Any], html_len: int, ms: float) -> dict[str, Any]:
@@ -188,7 +198,7 @@ def make_extract_fn(cfg: ExtractConfig | None = None,
             out: list[dict[str, Any]] = []
             for url, html in zip(pdf["url"], pdf["html"]):
                 t0 = time.perf_counter()
-                row = extract_page(url, html or b"", cfg)
+                row = _extract_or_fail(url, html or b"", cfg)
                 ms = (time.perf_counter() - t0) * 1000.0
                 full = _row_to_out(row, len(html or b""), ms)
                 full["exec_partition"] = pid
@@ -358,7 +368,7 @@ def extract_pages_with_meta(pages: DataFrame, cfg: ExtractConfig | None = None,
                 html = htmls.iloc[i]
                 if bool(do.iloc[i]) and html is not None:
                     t0 = time.perf_counter()
-                    row = extract_page(rec["url"], html or b"", cfg)
+                    row = _extract_or_fail(rec["url"], html or b"", cfg)
                     ms = (time.perf_counter() - t0) * 1000.0
                     full = _row_to_out(row, len(html or b""), ms)
                     full["exec_partition"] = pid

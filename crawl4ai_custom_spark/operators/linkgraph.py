@@ -40,47 +40,56 @@ def host_edges(links: DataFrame, src_url: str = "url",
     )
 
 
-_DRIVER_MAX_EDGES = 200_000  # the cluster_pairs small-input gate
+def _small_graph(edges: DataFrame, seeds: DataFrame | None = None):
+    """(edge rows, node set, seed ids in the graph) when the edges — and
+    the distinct ids of the seed table's first column, when given — pass
+    the linear small-input gate, else None (the caller then runs
+    distributed). Edge rows keep duplicates: out-degree counts rows."""
+    from ..session import LINEAR_MAX_ROWS, collect_if_small
+
+    rows = collect_if_small(edges.select("src", "dst"), LINEAR_MAX_ROWS)
+    if rows is None:
+        return None
+    nodes = {s for s, _ in rows} | {d for _, d in rows}
+    if seeds is None:
+        return rows, nodes, set()
+    seed_rows = collect_if_small(seeds.select(seeds.columns[0]).distinct(),
+                                 LINEAR_MAX_ROWS)
+    if seed_rows is None:
+        return None
+    return rows, nodes, {r[0] for r in seed_rows} & nodes
 
 
-def _collect_small_edges(edges: DataFrame):
-    """Incremental limit-probe: the collected edge ROW list (duplicates
-    preserved — out-degree counts rows) when the graph fits the driver
-    gate, else None. CollectLimit short-circuits at scale."""
-    rows = edges.select("src", "dst").limit(_DRIVER_MAX_EDGES + 1).collect()
-    return rows if len(rows) <= _DRIVER_MAX_EDGES else None
+def _local_ranks(rows, nodes: set, iterations: int, damping: float,
+                 seeds: set | None = None) -> dict:
+    """Driver twin of the pagerank chain, or with ``seeds`` of the
+    trustrank chain: per-contribution rank/out_deg, then base + damping *
+    sum, with the dataflow's own base expressions.
 
-
-def _collect_small_seeds(seeds: DataFrame):
-    """The distinct ids of a seed table's first column under the same
-    driver gate, else None (the caller then runs distributed)."""
-    rows = (seeds.select(seeds.columns[0]).distinct()
-            .limit(_DRIVER_MAX_EDGES + 1).collect())
-    return {r[0] for r in rows} if len(rows) <= _DRIVER_MAX_EDGES else None
-
-
-def _local_power_iteration(edge_rows, teleport: dict, init: dict,
-                           iterations: int, damping: float,
-                           base_from_teleport: bool):
-    """Driver twin of the pagerank/trustrank power step: per-contribution
-    rank/out_deg, then base + damping * sum. Summation order differs from
-    the shuffled groupBy only below 1e-15 relative — absorbed by the
-    +1e-12 round-8 the gates apply (the same argument that lets the
-    DuckDB oracle match the dataflow)."""
+    Contract: every rank equals the distributed chain's within a relative
+    1e-12 (``math.isclose(rel_tol=1e-12)``), not bit for bit. Both paths
+    add the same positive contributions, only in another order (edge-row
+    order here, shuffle order there); two orders of a sum of d positive
+    doubles differ by at most (d-1)·2^-52 relative, and a power step
+    mixes positive terms only, so the gap grows by at most that much per
+    iteration — under 1e-12 while iterations x max in-degree stays below
+    ~4000. The gates' +1e-12 round-8 (the DuckDB oracle's comparison)
+    absorbs the same reordering."""
+    if seeds is None:
+        n = len(nodes)
+        base = {x: (1.0 - damping) / n for x in nodes}
+        rank = {x: 1.0 / n for x in nodes}
+    else:
+        rank = {x: (1.0 / len(seeds) if x in seeds else 0.0) for x in nodes}
+        base = {x: (1.0 - damping) * t for x, t in rank.items()}
     deg: dict = {}
-    for s, _d in edge_rows:
+    for s, _d in rows:
         deg[s] = deg.get(s, 0) + 1
-    rank = dict(init)
     for _ in range(iterations):
         sums: dict = {}
-        for s, d in edge_rows:
+        for s, d in rows:
             sums[d] = sums.get(d, 0.0) + rank[s] / deg[s]
-        rank = {
-            node: ((1.0 - damping) * teleport[node] if base_from_teleport
-                   else teleport[node])
-            + damping * sums.get(node, 0.0)
-            for node in rank
-        }
+        rank = {x: base[x] + damping * sums.get(x, 0.0) for x in rank}
     return rank
 
 
@@ -90,29 +99,19 @@ def pagerank(edges: DataFrame, iterations: int = 3, damping: float = 0.85,
 
     Pass checkpoint_dir to materialize ranks each round (mandatory for
     double-digit iteration counts: truncates lineage like cluster_pairs).
-    Small graphs (see _collect_small_edges) iterate on the driver instead
-    of iterations x (join + groupBy) jobs; checkpoint_dir forces the
-    distributed path."""
+    Graphs that pass the small-input gate (see _small_graph) iterate on
+    the driver instead of iterations x (join + groupBy) jobs."""
     import os
 
     spark = edges.sparkSession
-    if checkpoint_dir is None:
-        rows = _collect_small_edges(edges)
-        if rows is not None:
-            from ..session import local_df
+    small = _small_graph(edges)
+    if small is not None:
+        from ..session import local_df
 
-            idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
-            node_set = {s for s, _ in rows} | {d for _, d in rows}
-            if not node_set:
-                return local_df(spark, [], f"node {idt}, rank double")
-            n = len(node_set)
-            base = (1.0 - damping) / n
-            rank = _local_power_iteration(
-                rows, {x: base for x in node_set},
-                {x: 1.0 / n for x in node_set},
-                iterations, damping, base_from_teleport=False)
-            return local_df(spark, sorted(rank.items()),
-                            f"node {idt}, rank double")
+        rows, nodes, _ = small
+        rank = _local_ranks(rows, nodes, iterations, damping)
+        idt = edges.schema["src"].dataType.simpleString()
+        return local_df(spark, sorted(rank.items()), f"node {idt}, rank double")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -158,30 +157,19 @@ def trustrank(edges: DataFrame, seeds: DataFrame, iterations: int = 3,
     rank 0. Same materialized-rounds shape as :func:`pagerank` (each
     power step is one join + one groupBy; checkpoint_dir truncates
     lineage). The ranks compose with :func:`pagerank_authority` unchanged
-    to feed `CrawlConfig.domain_authority`. Small graphs iterate on the
-    driver (pagerank's gate); checkpoint_dir forces distributed."""
+    to feed `CrawlConfig.domain_authority`. Small graphs with small seed
+    sets iterate on the driver (pagerank's gate)."""
     import os
 
     spark = edges.sparkSession
-    if checkpoint_dir is None:
-        rows = _collect_small_edges(edges)
-        seed_ids = _collect_small_seeds(seeds) if rows is not None else None
-        if seed_ids is not None:
-            from ..session import local_df
+    small = _small_graph(edges, seeds)
+    if small is not None:
+        from ..session import local_df
 
-            idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
-            node_set = {s for s, _ in rows} | {d for _, d in rows}
-            seed_set = seed_ids & node_set
-            if not seed_set:
-                return local_df(
-                    spark, [(x, 0.0) for x in sorted(node_set)],
-                    f"node {idt}, rank double")
-            t = {x: (1.0 / len(seed_set) if x in seed_set else 0.0)
-                 for x in node_set}
-            rank = _local_power_iteration(rows, t, dict(t), iterations,
-                                          damping, base_from_teleport=True)
-            return local_df(spark, sorted(rank.items()),
-                            f"node {idt}, rank double")
+        rows, nodes, seed_set = small
+        rank = _local_ranks(rows, nodes, iterations, damping, seed_set)
+        idt = edges.schema["src"].dataType.simpleString()
+        return local_df(spark, sorted(rank.items()), f"node {idt}, rank double")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -659,45 +647,27 @@ def spam_mass(edges: DataFrame, good_seeds: DataFrame,
     pr >= (1-d)/n > 0 for every node, so the ratio is always defined.
     Returns (node, pagerank, core_rank, spam_mass); spam_mass is clamped
     to [0, 1] (tiny negatives can appear when the core over-covers a
-    node at small iteration counts). Small graphs iterate on the driver
-    (pagerank's gate); checkpoint_dir forces distributed."""
+    node at small iteration counts). Small graphs with small seed sets
+    iterate on the driver (pagerank's gate)."""
     import os
 
     spark = edges.sparkSession
-    if checkpoint_dir is None:
-        rows = _collect_small_edges(edges)
-        seed_ids = (_collect_small_seeds(good_seeds) if rows is not None
-                    else None)
-        if seed_ids is not None:
-            from ..session import local_df
+    small = _small_graph(edges, good_seeds)
+    if small is not None:
+        from ..session import local_df
 
-            idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
-            node_set = {s for s, _ in rows} | {d for _, d in rows}
-            if not node_set:
-                return local_df(
-                    spark, [], f"node {idt}, pagerank double, "
-                    "core_rank double, spam_mass double")
-            n = len(node_set)
-            seed_set = seed_ids & node_set
-            n_seed = len(seed_set)
-            base = (1.0 - damping) / n
-            pr = _local_power_iteration(
-                rows, {x: base for x in node_set},
-                {x: 1.0 / n for x in node_set},
-                iterations, damping, base_from_teleport=False)
-            t = {x: (1.0 / n_seed if x in seed_set else 0.0)
-                 for x in node_set} if n_seed else {x: 0.0 for x in node_set}
-            tr = _local_power_iteration(rows, t, dict(t), iterations,
-                                        damping, base_from_teleport=True)
-            scale = n_seed / n
-            out = []
-            for x in sorted(node_set):
-                core = tr[x] * scale
-                mass = min(max((pr[x] - core) / pr[x], 0.0), 1.0)
-                out.append((x, pr[x], core, mass))
-            return local_df(
-                spark, out, f"node {idt}, pagerank double, "
-                "core_rank double, spam_mass double")
+        rows, nodes, seed_set = small
+        pr = _local_ranks(rows, nodes, iterations, damping)
+        tr = _local_ranks(rows, nodes, iterations, damping, seed_set)
+        scale = len(seed_set) / max(len(nodes), 1)
+        out = []
+        for x in sorted(nodes):
+            core = tr[x] * scale
+            mass = min(max((pr[x] - core) / pr[x], 0.0), 1.0)
+            out.append((x, pr[x], core, mass))
+        idt = edges.schema["src"].dataType.simpleString()
+        return local_df(spark, out, f"node {idt}, pagerank double, "
+                        "core_rank double, spam_mass double")
     nodes = (
         edges.select(F.col("src").alias("node"))
         .unionByName(edges.select(F.col("dst").alias("node")))
@@ -1071,55 +1041,43 @@ def coreness(edges: DataFrame, max_rounds: int = 30,
     spark = edges.sparkSession
     und = _undirected(edges)
     # small-graph driver twin (the cluster_pairs convention): the h-index
-    # recurrence is pure integer arithmetic, so an edge set that fits an
-    # incremental limit-probe runs the identical iteration locally
-    # instead of rounds x (join + two aggs + window + checkpoint) jobs;
-    # a checkpoint_dir signals an at-scale durable build -> distributed.
-    if checkpoint_dir is None:
-        driver_max_edges = 200_000
-        sample = und.limit(driver_max_edges + 1).collect()
-        if len(sample) <= driver_max_edges:
-            from ..session import local_df
+    # recurrence is pure integer arithmetic, so an edge set that passes
+    # the linear small-input gate runs the identical iteration locally
+    # instead of rounds x (join + two aggs + window + checkpoint) jobs
+    from ..session import LINEAR_MAX_ROWS, collect_if_small
 
-            nbrs: dict = {}
-            for a, b in sample:
-                nbrs.setdefault(a, []).append(b)
-                nbrs.setdefault(b, []).append(a)
-            est = {n: len(v) for n, v in nbrs.items()}
-            converged_l = False
-            for _ in range(max_rounds):
-                new: dict = {}
-                for n, nv in nbrs.items():
-                    hist: dict = {}
-                    for x in nv:
-                        v = est[x]
-                        hist[v] = hist.get(v, 0) + 1
-                    cum, h = 0, 0
-                    for v in sorted(hist, reverse=True):
-                        cum += hist[v]
-                        m = v if v < cum else cum
-                        if m > h:
-                            h = m
-                    new[n] = h
-                if new == est:
-                    converged_l = True
-                    est = new
-                    break
-                est = new
-            if not converged_l:
-                import warnings
+    sample = collect_if_small(und, LINEAR_MAX_ROWS)
+    if sample is not None:
+        from ..session import local_df
 
-                warnings.warn(
-                    f"coreness did not converge within max_rounds="
-                    f"{max_rounds}; estimates are a node-wise upper bound "
-                    "on true coreness — raise max_rounds",
-                    RuntimeWarning,
-                    stacklevel=2,
-                )
-            idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
-            return local_df(
-                spark, sorted(est.items()),
-                f"node {idt}, coreness bigint")
+        nbrs: dict = {}
+        for a, b in sample:
+            nbrs.setdefault(a, []).append(b)
+            nbrs.setdefault(b, []).append(a)
+        est = {n: len(v) for n, v in nbrs.items()}
+        for _ in range(max_rounds):
+            new: dict = {}
+            for n, nv in nbrs.items():
+                hist: dict = {}
+                for x in nv:
+                    v = est[x]
+                    hist[v] = hist.get(v, 0) + 1
+                cum, h = 0, 0
+                for v in sorted(hist, reverse=True):
+                    cum += hist[v]
+                    m = v if v < cum else cum
+                    if m > h:
+                        h = m
+                new[n] = h
+            if new == est:
+                break
+            est = new
+        else:
+            _warn_coreness_unconverged(max_rounds)
+        idt = edges.select(F.col("src")).schema[0].dataType.simpleString()
+        return local_df(
+            spark, sorted(est.items()),
+            f"node {idt}, coreness bigint")
     adj = und.select(F.col("a").alias("node"), F.col("b").alias("nbr")) \
         .unionByName(
             und.select(F.col("b").alias("node"), F.col("a").alias("nbr")))
@@ -1163,16 +1121,20 @@ def coreness(edges: DataFrame, max_rounds: int = 30,
             converged = True
             break
     if not converged:
-        import warnings
-
-        warnings.warn(
-            f"coreness did not converge within max_rounds={max_rounds}; "
-            "estimates are a node-wise upper bound on true coreness — "
-            "raise max_rounds",
-            RuntimeWarning,
-            stacklevel=2,
-        )
+        _warn_coreness_unconverged(max_rounds)
     return est.select("node", F.col("est").alias("coreness"))
+
+
+def _warn_coreness_unconverged(max_rounds: int) -> None:
+    import warnings
+
+    warnings.warn(
+        f"coreness did not converge within max_rounds={max_rounds}; "
+        "estimates are a node-wise upper bound on true coreness — "
+        "raise max_rounds",
+        RuntimeWarning,
+        stacklevel=3,
+    )
 
 
 def share_gini(

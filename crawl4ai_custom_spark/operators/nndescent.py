@@ -228,6 +228,16 @@ def _local_knn_graph(vecs: dict, k: int, rounds: int, n_planes: int) -> list:
     return out
 
 
+def _small_vectors(df: DataFrame, id_col: str, vec_col: str):
+    """The collected (id, vector) rows when ``df`` passes the pairwise
+    small-input gate, else None."""
+    from ..session import PAIRWISE_MAX_ROWS, collect_if_small
+
+    return collect_if_small(df.select(
+        F.col(id_col), F.col(vec_col).cast("array<double>")),
+        PAIRWISE_MAX_ROWS)
+
+
 def nn_descent(
     corpus: DataFrame,
     k: int = 5,
@@ -236,7 +246,6 @@ def nn_descent(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     checkpoint_dir: str | None = None,
-    driver_max_vectors: int = 256,
 ) -> DataFrame:
     """k-NN graph by NN-Descent: LSH-seeded init + ``rounds`` fixed local
     joins. Returns (id, nbr, cosine, rank) — rank 1..k per node.
@@ -248,24 +257,20 @@ def nn_descent(
     ~5x (symmetrize 2x + local join 2x + carry), so lazy lineage grows
     5^rounds — measured 14.5 s -> ~3 s at 2 rounds / 200 vectors.
 
-    ``driver_max_vectors``: corpora at or below this size (and without a
-    checkpoint_dir, which signals a durable at-scale build) run the
-    bit-identical driver twin (:func:`_local_knn_graph`) instead of
-    ~10 exchange-heavy Spark jobs — the cluster_pairs small-input
-    convention. The probe is an incremental limit-collect; 0 disables."""
-    if checkpoint_dir is None and driver_max_vectors > 0:
-        rows = corpus.select(
-            F.col(id_col), F.col(vec_col).cast("array<double>")
-        ).limit(driver_max_vectors + 1).collect()
-        if len(rows) <= driver_max_vectors:
-            from ..session import local_df
+    Corpora that pass the pairwise small-input gate
+    (``session.collect_if_small``) run the bit-identical driver twin
+    (:func:`_local_knn_graph`) instead of ~10 exchange-heavy Spark jobs
+    — the cluster_pairs small-input convention."""
+    rows = _small_vectors(corpus, id_col, vec_col)
+    if rows is not None:
+        from ..session import local_df
 
-            idt = corpus.select(F.col(id_col)).schema[0].dataType.simpleString()
-            out = _local_knn_graph({r[0]: list(r[1]) for r in rows},
-                                   k, rounds, n_planes)
-            return local_df(
-                corpus.sparkSession, out,
-                f"id {idt}, nbr {idt}, cosine double, rank int")
+        idt = corpus.select(F.col(id_col)).schema[0].dataType.simpleString()
+        out = _local_knn_graph({r[0]: list(r[1]) for r in rows},
+                               k, rounds, n_planes)
+        return local_df(
+            corpus.sparkSession, out,
+            f"id {idt}, nbr {idt}, cosine double, rank int")
     vectors = _vectors(corpus, id_col, vec_col)
     # keep the seed's cosine so rounds=0 returns the ranked LSH seed
     # graph instead of failing to resolve the column
@@ -340,7 +345,6 @@ def graph_ann_search(
     id_col: str = "vec_id",
     vec_col: str = "embedding",
     entry_points: DataFrame | None = None,
-    driver_max_vectors: int = 256,
 ) -> DataFrame:
     """ANN top-k over a built k-NN ``graph(id, nbr)``: every query starts
     at the shared entry points; each round expands the current beam's
@@ -367,47 +371,39 @@ def graph_ann_search(
     on id order; the same repair HNSW's upper layers / NSW's long links
     provide. When given, ``n_entry`` is ignored.
 
-    Small inputs (corpus, queries and any given entry points each fit
-    ``driver_max_vectors``, default 256, and the graph collects under the
-    matching edge bound) run a bit-identical
-    driver twin of the synchronized beam loop instead of
+    Small inputs (corpus, queries and any given entry points each pass
+    the pairwise small-input gate, and the graph the linear one) run a
+    bit-identical driver twin of the synchronized beam loop instead of
     rounds x (union+distinct+2 joins+window+localCheckpoint) Spark jobs —
     the cluster_pairs small-input convention; the distributed path is
     unchanged and exercised by test_driver_path_matches_distributed."""
-    crows = (corpus.select(
-        F.col(id_col), F.col(vec_col).cast("array<double>")
-    ).limit(driver_max_vectors + 1).collect()
-        if driver_max_vectors > 0 else [None] * (driver_max_vectors + 1))
-    if len(crows) <= driver_max_vectors:
-        gmax = driver_max_vectors * max(k, 16)
-        grows = graph.select("id", "nbr").limit(gmax + 1).collect()
-        # queries and given entry points share the corpus bound: past it
-        # they stay uncollected and the search runs distributed
-        qrows = erows = []
-        if len(grows) <= gmax:
-            qrows = queries.select(
-                F.col(id_col), F.col(vec_col).cast("array<double>")
-            ).limit(driver_max_vectors + 1).collect()
-            if entry_points is not None:
-                erows = entry_points.select("node").limit(
-                    driver_max_vectors + 1).collect()
-        if (len(grows) <= gmax and len(qrows) <= driver_max_vectors
-                and len(erows) <= driver_max_vectors):
-            from ..session import local_df
+    from ..session import LINEAR_MAX_ROWS, PAIRWISE_MAX_ROWS, collect_if_small
 
-            if entry_points is None:
-                ids_sorted = sorted(r[0] for r in crows)
-                entries = ids_sorted[:n_entry]
-            else:
-                entries = [r[0] for r in erows]
-            vecs = {r[0]: list(r[1]) for r in crows}
-            qvecs = {r[0]: list(r[1]) for r in qrows}
-            out = _local_graph_ann(vecs, grows, qvecs, entries,
-                                   k, beam, rounds)
-            idt = corpus.select(F.col(id_col)).schema[0].dataType.simpleString()
-            return local_df(
-                corpus.sparkSession, out,
-                f"query_id {idt}, neighbor_id {idt}, cosine double, rank int")
+    # each probe runs only while every earlier one fit: past a bound the
+    # rest stay uncollected and the search runs distributed
+    crows = _small_vectors(corpus, id_col, vec_col)
+    grows = (collect_if_small(graph.select("id", "nbr"), LINEAR_MAX_ROWS)
+             if crows is not None else None)
+    qrows = (_small_vectors(queries, id_col, vec_col) if grows is not None
+             else None)
+    erows = ([] if entry_points is None or qrows is None
+             else collect_if_small(entry_points.select("node"),
+                                   PAIRWISE_MAX_ROWS))
+    if qrows is not None and erows is not None:
+        from ..session import local_df
+
+        if entry_points is None:
+            entries = sorted(r[0] for r in crows)[:n_entry]
+        else:
+            entries = [r[0] for r in erows]
+        vecs = {r[0]: list(r[1]) for r in crows}
+        qvecs = {r[0]: list(r[1]) for r in qrows}
+        out = _local_graph_ann(vecs, grows, qvecs, entries,
+                               k, beam, rounds)
+        idt = corpus.select(F.col(id_col)).schema[0].dataType.simpleString()
+        return local_df(
+            corpus.sparkSession, out,
+            f"query_id {idt}, neighbor_id {idt}, cosine double, rank int")
     vectors = _vectors(corpus, id_col, vec_col)
     q = queries.select(
         F.col(id_col).alias("query_id"),

@@ -100,6 +100,32 @@ def spread_scan(df, bytes_per_task: int = 256 * 1024,
     return df
 
 
+# Small-input gate of the operators that carry a driver twin (a plain-Python
+# path that returns the same rows as the distributed dataflow). One bound per
+# cost class of twin:
+# - rows that each carry a document, vector or signature, where the twin's
+#   work grows with the square of the rows (all-pairs Jaccard, k-NN graph,
+#   winnowing pairs) or with the rows' text (LSH planner, langid training);
+PAIRWISE_MAX_ROWS = 512
+# - rows that are small id/word tuples (edges, seeds, vocab words,
+#   fingerprints), where the twin's work is linear in the rows.
+LINEAR_MAX_ROWS = 200_000
+
+
+def collect_if_small(df, max_rows: int):
+    """The rows of ``df`` collected to the driver, or None when ``df`` has
+    more than ``max_rows`` rows — the one probe that picks an operator's
+    driver twin over its distributed path. Input size alone decides.
+
+    One incremental limit-collect: CollectLimit stops scanning once
+    ``max_rows + 1`` rows have arrived, so a web-scale input only computes
+    enough partitions to overflow the bound. Operators import this at call
+    time, so substituting it (tests force the distributed path that way)
+    reaches every twin."""
+    rows = df.limit(max_rows + 1).collect()
+    return rows if len(rows) <= max_rows else None
+
+
 def local_df(spark: SparkSession, rows: list, ddl: str):
     """Small driver-side literal tables via the Arrow fast path.
 

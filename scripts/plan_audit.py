@@ -1191,12 +1191,8 @@ def main() -> None:
         "operators/adaptive_session.py",  # query-variation ids: ~10 by contract
         "operators/filters.py",    # stats rows: one per filter in the chain
         "operators/textstats.py",  # bounded query-term list
-        "operators/dedup.py",  # union-find fast path: size-gated by a
-                               # parquet-footer count (n_edges <=
-                               # driver_max_edges) before the collect
-        "operators/bpe.py",    # vocab collect size-gated by footer count
-                               # (<= driver_max_vocab); merge table is
-                               # n_merges rows by construction
+        "operators/bpe.py",    # merge table / piece vocab: n_merges
+                               # rows by construction
         "state/backend.py",  # catalog probe + snapshot tags: O(waves) rows
     }
     collect_viol = []

@@ -28,6 +28,7 @@ Usage: python scripts/scale_rehearsal.py
 
 from __future__ import annotations
 
+import contextlib
 import json
 import os
 import sys
@@ -41,6 +42,23 @@ CACHE = os.path.join(REPO, ".bench_cache")
 CPUS = int(os.environ.get("SPARK_GRAFT_CPUS", "32"))
 N_PAGES = int(os.environ.get("SPARK_GRAFT_REHEARSAL_PAGES", "80000"))
 N_DOC_VARIANTS = 10
+
+
+@contextlib.contextmanager
+def _small_input_gate(max_rows: int | None):
+    """Runs the block with ``session.collect_if_small``'s bound replaced by
+    ``max_rows``; None makes every input count as large, so the operators
+    run their distributed paths."""
+    from crawl4ai_custom_spark import session
+
+    shipped = session.collect_if_small
+    session.collect_if_small = (
+        (lambda df, _bound: None) if max_rows is None
+        else (lambda df, _bound: shipped(df, max_rows)))
+    try:
+        yield
+    finally:
+        session.collect_if_small = shipped
 
 
 def _spark():
@@ -682,8 +700,10 @@ def ccstar200k(spark) -> dict:
     r["star_nodes"] = len(star_rows)
 
     # ground truth: the size-gated driver union-find inside cluster_pairs
+    # (its gate raised past this graph's ~320k directed edges)
     t = time.time()
-    uf = cluster_pairs(pairs, driver_max_edges=1_000_000)
+    with _small_input_gate(1_000_000):
+        uf = cluster_pairs(pairs)
     uf_rows = {(x["id"], x["cluster_id"]) for x in uf.collect()}
     r["unionfind_seconds"] = round(time.time() - t, 2)
     r["star_matches_unionfind"] = star_rows == uf_rows
@@ -692,7 +712,9 @@ def ccstar200k(spark) -> dict:
     t = time.time()
     with warnings.catch_warnings(record=True) as w:
         warnings.simplefilter("always")
-        cluster_pairs(pairs, max_iters=30, driver_max_edges=0).count()
+        with _small_input_gate(None):
+            prop = cluster_pairs(pairs, max_iters=30)
+        prop.count()
         r["prop30_converged"] = not any(
             "NOT converged" in str(x.message) for x in w)
     r["prop30_seconds"] = round(time.time() - t, 2)

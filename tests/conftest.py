@@ -40,6 +40,32 @@ def jobs_started(spark):
     return count
 
 
+@pytest.fixture()
+def force_distributed(monkeypatch):
+    """``with force_distributed(): ...`` runs the block with
+    ``session.collect_if_small`` reporting every input as too large, so
+    each operator with a driver twin takes its distributed path;
+    ``force_distributed(max_rows=n)`` lowers every gate's bound to ``n``
+    instead. Operators look the helper up when called, so a DataFrame
+    built inside the block keeps its path when collected after it."""
+    import contextlib
+
+    from crawl4ai_custom_spark import session
+
+    shipped = session.collect_if_small
+
+    @contextlib.contextmanager
+    def forced(max_rows: int | None = None):
+        with monkeypatch.context() as m:
+            m.setattr(session, "collect_if_small",
+                      (lambda df, bound: None) if max_rows is None
+                      else (lambda df, bound: shipped(df, min(bound,
+                                                              max_rows))))
+            yield
+
+    return forced
+
+
 @pytest.fixture(scope="session")
 def site_dir(tmp_path_factory):
     """Small deterministic crawl site (pages/seeds/robots parquet)."""

@@ -92,16 +92,14 @@ def test_bpe_unseen_word_and_empty_doc(spark):
     assert enc[101]["n_words"] == 0 and list(enc[101]["tokens"]) == []
 
 
-def test_train_bpe_both_paths_agree(spark):
+def test_train_bpe_both_paths_agree(spark, force_distributed):
     docs = spark.createDataFrame(
         list(enumerate(CORPUS)), ["doc_id", "text"]
     )
-    fast = [(r["left"], r["right"])
-            for r in train_bpe(docs, 8).orderBy("rank").collect()]
-    dist = [(r["left"], r["right"])
-            for r in train_bpe(docs, 8, driver_max_vocab=0)
-            .orderBy("rank").collect()]
-    assert fast == dist and len(fast) == 8
+    fast = sorted(map(tuple, train_bpe(docs, 8).collect()))
+    with force_distributed():
+        dist = train_bpe(docs, 8)
+    assert fast == sorted(map(tuple, dist.collect())) and len(fast) == 8
 
 
 def test_unigram_vocab_segment_and_em(spark):
@@ -269,7 +267,8 @@ def _ref_wp_segment(word, pieces):
     return parts
 
 
-def test_train_wordpiece_matches_reference_both_paths(spark, tmp_path):
+def test_train_wordpiece_matches_reference_both_paths(spark, tmp_path,
+                                                      force_distributed):
     from crawl4ai_custom_spark.operators.bpe import train_wordpiece
 
     docs = spark.createDataFrame([(i, t) for i, t in enumerate(CORPUS)],
@@ -278,9 +277,10 @@ def test_train_wordpiece_matches_reference_both_paths(spark, tmp_path):
     fast = [(r["left"], r["right"]) for r in
             train_wordpiece(docs, 12,
                             checkpoint_dir=str(tmp_path / "f")).orderBy("rank").collect()]
-    dist = [(r["left"], r["right"]) for r in
-            train_wordpiece(docs, 12, driver_max_vocab=0,
-                            checkpoint_dir=str(tmp_path / "d")).orderBy("rank").collect()]
+    with force_distributed():
+        dist_df = train_wordpiece(docs, 12, checkpoint_dir=str(tmp_path / "d"))
+    dist = [(r["left"], r["right"])
+            for r in dist_df.orderBy("rank").collect()]
     assert fast == ref
     assert dist == ref
     # likelihood score ranks differently from raw pair counts: WordPiece

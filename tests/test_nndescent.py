@@ -216,7 +216,8 @@ def test_graph_ann_search_honors_explicit_entry_points(spark, clustered):
     exact.unpersist(); graph.unpersist()
 
 
-def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
+def test_driver_path_matches_distributed(spark, clustered, monkeypatch,
+                                         force_distributed):
     """The size-gated driver twins (_local_knn_graph / _local_graph_ann)
     must be BIT-identical to the distributed dataflow: same left-fold
     float order, same (cosine DESC, id ASC) orderings. Compares full row
@@ -224,10 +225,9 @@ def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
     from crawl4ai_custom_spark.operators import nndescent
     from crawl4ai_custom_spark.operators.nndescent import (
         graph_ann_search, nn_descent)
+    from crawl4ai_custom_spark.session import PAIRWISE_MAX_ROWS
 
-    # the corpus is past the default gate: size the gate to the corpus so
     # the driver twin really builds `fast`
-    n = clustered.count()
     twin_calls = []
     local_knn_graph = nndescent._local_knn_graph
 
@@ -236,11 +236,10 @@ def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
         return local_knn_graph(*args, **kwargs)
 
     monkeypatch.setattr(nndescent, "_local_knn_graph", counting_twin)
-    fast = nn_descent(clustered, k=4, rounds=2, n_planes=4,
-                      driver_max_vectors=n)
+    fast = nn_descent(clustered, k=4, rounds=2, n_planes=4)
     assert twin_calls == [1]
-    slow = nn_descent(clustered, k=4, rounds=2, n_planes=4,
-                      driver_max_vectors=0)
+    with force_distributed():
+        slow = nn_descent(clustered, k=4, rounds=2, n_planes=4)
     assert twin_calls == [1]
     assert sorted(map(tuple, fast.collect())) == \
         sorted(map(tuple, slow.collect()))
@@ -248,57 +247,54 @@ def test_driver_path_matches_distributed(spark, clustered, monkeypatch):
     queries = clustered.where(F.col("vec_id") < 6)
     g_fast = graph_ann_search(fast, clustered, queries, k=4, beam=8,
                               rounds=2, n_entry=6)
-    g_slow = graph_ann_search(slow, clustered, queries, k=4, beam=8,
-                              rounds=2, n_entry=6, driver_max_vectors=0)
+    with force_distributed():
+        g_slow = graph_ann_search(slow, clustered, queries, k=4, beam=8,
+                                  rounds=2, n_entry=6)
     assert sorted(map(tuple, g_fast.collect())) == \
         sorted(map(tuple, g_slow.collect()))
 
-    # a bound the corpus fits: few queries take the driver twin, queries
-    # past the bound are never collected and run distributed
-    g_local = graph_ann_search(fast, clustered, queries, k=4, beam=8,
-                               rounds=2, n_entry=6, driver_max_vectors=n)
-    assert sorted(map(tuple, g_local.collect())) == \
-        sorted(map(tuple, g_slow.collect()))
+    # queries past the gate are never collected and run distributed
     many = clustered.unionByName(
-        queries.withColumn("vec_id", F.col("vec_id") + 100_000))
-    want = graph_ann_search(slow, clustered, many, k=4, beam=8, rounds=2,
-                            n_entry=6, driver_max_vectors=0)
+        clustered.withColumn("vec_id", F.col("vec_id") + 100_000))
+    assert many.count() > PAIRWISE_MAX_ROWS
+    with force_distributed():
+        want = graph_ann_search(slow, clustered, many, k=4, beam=8,
+                                rounds=2, n_entry=6)
 
     def no_driver_twin(*args, **kwargs):
         raise AssertionError("driver twin ran")
 
     monkeypatch.setattr(nndescent, "_local_graph_ann", no_driver_twin)
     got = graph_ann_search(fast, clustered, many, k=4, beam=8, rounds=2,
-                           n_entry=6, driver_max_vectors=n)
+                           n_entry=6)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))
 
 
-
 def test_graph_ann_entry_points_past_bound_run_distributed(
-        spark, clustered, monkeypatch):
+        spark, clustered, monkeypatch, force_distributed):
     """A corpus and queries under the driver bound but an entry-point
-    table past it (here 408 rows of the 8 one-per-cluster ids): the
-    entry points are never collected whole and the search runs the
-    distributed beam loop."""
+    table past it (rows of the 8 one-per-cluster ids): the entry points
+    are never collected whole and the search runs the distributed beam
+    loop."""
     from crawl4ai_custom_spark.operators import nndescent
     from crawl4ai_custom_spark.operators.nndescent import (
         graph_ann_search, nn_descent)
+    from crawl4ai_custom_spark.session import PAIRWISE_MAX_ROWS
 
     graph = nn_descent(clustered, k=4, rounds=2, n_planes=4)
     queries = clustered.where(F.col("vec_id") < 6)
     entries = spark.createDataFrame(
-        [(i % 8,) for i in range(408)], ["node"])
-    want = graph_ann_search(graph, clustered, queries, k=4, beam=8,
-                            rounds=2, entry_points=entries,
-                            driver_max_vectors=0)
+        [(i % 8,) for i in range(PAIRWISE_MAX_ROWS + 8)], ["node"])
+    with force_distributed():
+        want = graph_ann_search(graph, clustered, queries, k=4, beam=8,
+                                rounds=2, entry_points=entries)
 
     def no_driver_twin(*args, **kwargs):
         raise AssertionError("driver twin ran")
 
     monkeypatch.setattr(nndescent, "_local_graph_ann", no_driver_twin)
     got = graph_ann_search(graph, clustered, queries, k=4, beam=8, rounds=2,
-                           entry_points=entries,
-                           driver_max_vectors=clustered.count())
+                           entry_points=entries)
     assert sorted(map(tuple, got.collect())) == \
         sorted(map(tuple, want.collect()))

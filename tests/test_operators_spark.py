@@ -1898,7 +1898,7 @@ def test_semdedup_keeps_cluster_edge_member(spark, tmp_path):
     assert all(again[k] == out[k]["keep"] for k in again)
 
 
-def test_cluster_pairs_both_paths_agree(spark, tmp_path):
+def test_cluster_pairs_both_paths_agree(spark, tmp_path, force_distributed):
     """The size-gated driver union-find fast path and the distributed
     min-label propagation produce identical components (chain + pair +
     implicit singletons), including on a chain whose diameter forces
@@ -1913,12 +1913,9 @@ def test_cluster_pairs_both_paths_agree(spark, tmp_path):
             pairs, checkpoint_dir=str(tmp_path / "f")
         ).collect()
     }
-    dist = {
-        r["id"]: r["cluster_id"]
-        for r in cluster_pairs(
-            pairs, checkpoint_dir=str(tmp_path / "d"), driver_max_edges=0
-        ).collect()
-    }
+    with force_distributed():
+        slow = cluster_pairs(pairs, checkpoint_dir=str(tmp_path / "d"))
+    dist = {r["id"]: r["cluster_id"] for r in slow.collect()}
     assert fast == dist
     assert fast[8] == 1 and fast[21] == 20 and fast[31] == 30
 
@@ -3677,10 +3674,12 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
         winnow_fingerprints(docs, window=0)
 
 
-def test_winnow_matches_doc_bound_switches_path_not_pairs(spark):
+def test_winnow_matches_doc_bound_switches_path_not_pairs(spark,
+                                                         force_distributed):
     """512 docs run the local pair loop, 513 the fingerprint join; both
-    give the pairs a plain set intersection gives. Docs 2j and 2j+1 share
-    two fingerprints, the four docs of a quad share one."""
+    give the pairs a plain set intersection gives, and so does the
+    distributed join forced on the 512 docs. Docs 2j and 2j+1 share two
+    fingerprints, the four docs of a quad share one."""
     from crawl4ai_custom_spark.operators.dedup import winnow_matches
 
     for n_docs, local in ((512, True), (513, False)):
@@ -3699,6 +3698,10 @@ def test_winnow_matches_doc_bound_switches_path_not_pairs(spark):
             plan = out._jdf.queryExecution().analyzed().toString()
             assert ("Join" not in plan) == local, (n_docs, plan)
             assert sorted(map(tuple, out.collect())) == want
+            if local:
+                with force_distributed():
+                    dist = winnow_matches(fp, min_shared=min_shared)
+                assert sorted(map(tuple, dist.collect())) == want
 
 
 def test_fuzzy_term_pairs_exact_vs_bruteforce(spark):
@@ -3877,7 +3880,8 @@ def test_psi_drift_closed_form_and_identity(spark):
                - sum(rows[k]["psi_term"] for k in (0, 1, 2))) < 1e-12
 
 
-def test_cluster_pairs_star_matches_propagation(spark, tmp_path):
+def test_cluster_pairs_star_matches_propagation(spark, tmp_path,
+                                                force_distributed):
     """Large-star/small-star CC equals min-label propagation on a graph
     mixing a mega-hub (skew), a long chain (diameter >> rounds), and
     isolated pairs — and roots map to themselves."""
@@ -3899,9 +3903,10 @@ def test_cluster_pairs_star_matches_propagation(spark, tmp_path):
 
     star = {(r["id"], r["cluster_id"]) for r in cluster_pairs_star(
         df, checkpoint_dir=str(tmp_path / "star")).collect()}
-    prop = {(r["id"], r["cluster_id"]) for r in cluster_pairs(
-        df, max_iters=60, checkpoint_dir=str(tmp_path / "prop"),
-        driver_max_edges=0).collect()}
+    with force_distributed():
+        prop_df = cluster_pairs(df, max_iters=60,
+                                checkpoint_dir=str(tmp_path / "prop"))
+    prop = {(r["id"], r["cluster_id"]) for r in prop_df.collect()}
     assert star == prop
     roots = {c for _, c in star}
     assert all((c, c) in star for c in roots)  # roots self-labelled
@@ -4277,7 +4282,8 @@ def _brute_coreness(pairs):
     return core
 
 
-def test_coreness_matches_peeling_and_kcore(spark, tmp_path):
+def test_coreness_matches_peeling_and_kcore(spark, tmp_path,
+                                            force_distributed):
     """h-index iteration converges to exact coreness (vs a driver peeling
     reference) on a clique+chain+random mix; consistency with k_core:
     {coreness >= k} == k-core membership."""
@@ -4291,17 +4297,18 @@ def test_coreness_matches_peeling_and_kcore(spark, tmp_path):
     pairs = [(a, b) for a, b in pairs if a != b]
     edges = spark.createDataFrame(pairs, "src bigint, dst bigint")
 
-    got = {r["node"]: r["coreness"] for r in coreness(
-        edges, checkpoint_dir=str(tmp_path / "c")).collect()}
     want = _brute_coreness(pairs)
-    assert got == want
+    # the parquet-rounds and localCheckpoint distributed paths and the
+    # driver twin
+    with force_distributed():
+        runs = [coreness(edges, checkpoint_dir=str(tmp_path / "c")),
+                coreness(edges)]
+    runs.append(coreness(edges))
+    for run in runs:
+        assert {r["node"]: r["coreness"] for r in run.collect()} == want
 
     kc = {r["node"] for r in k_core(edges, k=4).collect()}
     assert kc == {v for v, c in want.items() if c >= 4} == {0, 1, 2, 3, 4}
-
-    # localCheckpoint path agrees with the parquet-rounds path
-    again = {r["node"]: r["coreness"] for r in coreness(edges).collect()}
-    assert again == got
 
 
 def test_colink_similarity_modes_and_fanout_guard(spark):
@@ -4337,11 +4344,10 @@ def test_colink_similarity_modes_and_fanout_guard(spark):
         colink_similarity(df, mode="nope")
 
 
-def test_minhash_driver_path_matches_distributed(spark):
-    """The size-gated driver twin of minhash_lsh_dedup / lsh_plan_stats
+def test_minhash_driver_path_matches_distributed(spark, force_distributed):
+    """The size-gated driver twins of minhash_lsh_dedup / lsh_plan_stats
     must be bit-identical to the dataflow (integer M31/md5 arithmetic +
-    one final division). persist_shingles=True forces the distributed
-    path for the comparison."""
+    one final division), compared row for row on the same input."""
     from crawl4ai_custom_spark.operators.dedup import (
         lsh_plan_stats,
         minhash_lsh_dedup,
@@ -4353,44 +4359,26 @@ def test_minhash_driver_path_matches_distributed(spark):
                 f"plus tail {i % 5} and some more filler text ok")
             for i in range(40)] + [(99, None), (100, "")]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
+    sigs = minhash_signatures(shingle_table(docs), 16, 1)
     fast = minhash_lsh_dedup(docs, num_hashes=16, bands=4,
                              jaccard_threshold=0.3)
-    slow = minhash_lsh_dedup(docs, num_hashes=16, bands=4,
-                             jaccard_threshold=0.3, persist_shingles=True)
-    assert sorted(map(tuple, fast.collect())) == \
-        sorted(map(tuple, slow.collect()))
-
-    sigs = minhash_signatures(shingle_table(docs), 16, 1)
     fast_plan = lsh_plan_stats(sigs, [2, 4, 8], num_hashes=16)
-    # a >256-row signature table exercises the distributed branch (the
-    # twin's numbers for the small table are checked by hand below)
-    import crawl4ai_custom_spark.operators.dedup as dd
-
-    sigs_big = sigs
-    for j in range(1, 9):
-        sigs_big = sigs_big.unionByName(
-            sigs.withColumn("id", F.col("id") + F.lit(j * 1000)))
-    assert lsh_plan_stats(sigs_big, [2, 4, 8], num_hashes=16).count() == 3
-    got = {r["bands"]: r for r in fast_plan.collect()}
-    hand = {}
-    srows = sigs.collect()
-    for b in (2, 4, 8):
-        r = 16 // b
-        hist = {}
-        for row in srows:
-            for bh in dd._local_band_hashes(list(row["sig"]), b, 16):
-                hist[bh] = hist.get(bh, 0) + 1
-        hand[b] = (len(hist), sum(1 for n in hist.values() if n > 1),
-                   max(hist.values()), sum(n * (n - 1) for n in hist.values()) // 2)
-    for b in (2, 4, 8):
-        g = got[b]
-        assert (g["n_buckets"], g["n_colliding_buckets"], g["max_bucket"],
-                g["pred_candidate_rows"]) == hand[b], b
+    with force_distributed():
+        slow = minhash_lsh_dedup(docs, num_hashes=16, bands=4,
+                                 jaccard_threshold=0.3)
+        slow_plan = lsh_plan_stats(sigs, [2, 4, 8], num_hashes=16)
+    fast_rows = sorted(map(tuple, fast.collect()))
+    assert fast_rows and fast_rows == sorted(map(tuple, slow.collect()))
+    assert fast_plan.dtypes == slow_plan.dtypes
+    plan_rows = sorted(map(tuple, fast_plan.collect()))
+    assert len(plan_rows) == 3
+    assert plan_rows == sorted(map(tuple, slow_plan.collect()))
 
 
-def test_coreness_driver_path_matches_distributed(spark, tmp_path):
+def test_coreness_driver_path_matches_distributed(spark, tmp_path,
+                                                  force_distributed):
     """The integer h-index driver twin must equal the distributed
-    iteration exactly (checkpoint_dir forces the distributed path)."""
+    iteration exactly."""
     from crawl4ai_custom_spark.operators.linkgraph import coreness
 
     rows = [(i, (i * 7 + 3) % 40) for i in range(200)] + \
@@ -4398,110 +4386,134 @@ def test_coreness_driver_path_matches_distributed(spark, tmp_path):
     edges = spark.createDataFrame(
         [(a, b) for a, b in rows if a != b], ["src", "dst"])
     fast = coreness(edges)
-    slow = coreness(edges, checkpoint_dir=str(tmp_path / "core"))
+    with force_distributed():
+        slow = coreness(edges, checkpoint_dir=str(tmp_path / "core"))
     assert sorted(map(tuple, fast.collect())) == \
         sorted(map(tuple, slow.collect()))
 
 
-def test_pagerank_family_driver_path_matches_distributed(spark, tmp_path):
+def _assert_ranks_close(fast, slow, cols):
+    """Same nodes, and every rank column within a relative 1e-12 — the
+    _local_ranks contract (a reordered sum of positive terms),
+    which no rounding boundary can flip."""
+    import math
+
+    a = {r["node"]: [r[c] for c in cols] for r in fast.collect()}
+    b = {r["node"]: [r[c] for c in cols] for r in slow.collect()}
+    assert a and a.keys() == b.keys()
+    for node, vals in a.items():
+        for c, x, y in zip(cols, vals, b[node]):
+            assert math.isclose(x, y, rel_tol=1e-12), (node, c, x, y)
+
+
+def _seeded_graph(spark, seed):
+    """A tiny random directed graph (duplicate edges and self-loops kept:
+    both paths count them) and a seed set with one off-graph id."""
+    import random
+
+    rng = random.Random(seed)
+    n = rng.randrange(5, 40)
+    edges = [(rng.randrange(n), rng.randrange(n))
+             for _ in range(rng.randrange(n, 4 * n))]
+    seeds = sorted(rng.sample(range(n), rng.randrange(1, 4))) + [10_000]
+    return (spark.createDataFrame(edges, "src bigint, dst bigint"),
+            spark.createDataFrame([(x,) for x in seeds], "node bigint"))
+
+
+def test_pagerank_family_driver_path_matches_distributed(
+        spark, tmp_path, force_distributed):
     """pagerank/trustrank/spam_mass driver twins vs the distributed
-    chains (checkpoint_dir forces distributed): equal after the gates'
-    own +1e-12 round-8, which is what makes the dataflow itself
-    summation-order deterministic."""
+    chains on the same graphs: every rank within a relative 1e-12."""
     from crawl4ai_custom_spark.operators.linkgraph import (
         pagerank, spam_mass, trustrank)
 
-    edges = spark.createDataFrame(
+    fixture = spark.createDataFrame(
         [(i, (i * 7 + 1) % 150) for i in range(150)]
         + [(i, (i * 13 + 2) % 150) for i in range(150)],
         ["src", "dst"]).where("src != dst").distinct()
-    seeds = spark.range(0, 150, 40).selectExpr("id as node")
-
-    def r8(df, cols):
-        return sorted(map(tuple, df.select(
-            "node", *[F.round(F.col(c) + 1e-12, 8).alias(c) for c in cols]
-        ).collect()))
-
-    assert r8(pagerank(edges, 3), ["rank"]) == \
-        r8(pagerank(edges, 3, checkpoint_dir=str(tmp_path / "pr")), ["rank"])
-    assert r8(trustrank(edges, seeds, 3), ["rank"]) == \
-        r8(trustrank(edges, seeds, 3,
-                     checkpoint_dir=str(tmp_path / "tr")), ["rank"])
-    assert r8(spam_mass(edges, seeds, 2), ["pagerank", "core_rank"]) == \
-        r8(spam_mass(edges, seeds, 2,
-                     checkpoint_dir=str(tmp_path / "sm")),
-           ["pagerank", "core_rank"])
+    graphs = [(fixture, spark.range(0, 150, 40).selectExpr("id as node"))]
+    graphs += [_seeded_graph(spark, seed) for seed in (1, 2, 3)]
+    for g, (edges, seeds) in enumerate(graphs):
+        runs = {
+            "pr": lambda: pagerank(edges, 3),
+            "tr": lambda: trustrank(edges, seeds, 3),
+            "sm": lambda: spam_mass(edges, seeds, 2),
+        }
+        fast = {name: run() for name, run in runs.items()}
+        with force_distributed():
+            slow = {name: run() for name, run in runs.items()}
+        _assert_ranks_close(fast["pr"], slow["pr"], ["rank"])
+        _assert_ranks_close(fast["tr"], slow["tr"], ["rank"])
+        _assert_ranks_close(fast["sm"], slow["sm"],
+                            ["pagerank", "core_rank"])
 
 
 def _seed_gate_graph(spark):
-    edges = spark.createDataFrame(
+    return spark.createDataFrame(
         [(i, (i * 7 + 1) % 60) for i in range(60)], ["src", "dst"]
     ).where("src != dst")
 
-    def r8(df, cols):
-        return sorted(map(tuple, df.select(
-            "node", *[F.round(F.col(c) + 1e-12, 8).alias(c) for c in cols]
-        ).collect()))
 
-    return edges, r8
-
-
-def test_trustrank_seeds_past_gate_run_distributed(spark, monkeypatch):
+def test_trustrank_seeds_past_gate_run_distributed(spark, monkeypatch,
+                                                   force_distributed):
     """With the edges under the driver gate but more distinct seeds than
     it allows, the seed table is never collected whole: trustrank and
     spam_mass run the distributed chain (the driver twin never runs) and
     equal the default gate's driver result."""
     import crawl4ai_custom_spark.operators.linkgraph as lg
 
-    edges, r8 = _seed_gate_graph(spark)
+    edges = _seed_gate_graph(spark)  # 59 edges
     seeds = spark.range(0, 100).selectExpr("id as node")  # 40 off-graph
-    want_tr = r8(lg.trustrank(edges, seeds, 2), ["rank"])
-    want_sm = r8(lg.spam_mass(edges, seeds, 1), ["pagerank", "core_rank"])
+    want_tr = lg.trustrank(edges, seeds, 2)
+    want_sm = lg.spam_mass(edges, seeds, 1)
 
     def no_twin(*args, **kwargs):
         raise AssertionError("driver twin ran")
 
-    monkeypatch.setattr(lg, "_DRIVER_MAX_EDGES", 80)
-    monkeypatch.setattr(lg, "_local_power_iteration", no_twin)
-    assert r8(lg.trustrank(edges, seeds, 2), ["rank"]) == want_tr
-    assert r8(lg.spam_mass(edges, seeds, 1),
-              ["pagerank", "core_rank"]) == want_sm
+    monkeypatch.setattr(lg, "_local_ranks", no_twin)
+    with force_distributed(max_rows=80):
+        got_tr = lg.trustrank(edges, seeds, 2)
+        got_sm = lg.spam_mass(edges, seeds, 1)
+    _assert_ranks_close(want_tr, got_tr, ["rank"])
+    _assert_ranks_close(want_sm, got_sm, ["pagerank", "core_rank"])
 
 
-def test_trustrank_duplicate_seed_rows_count_once_at_gate(spark, tmp_path,
-                                                          monkeypatch):
+def test_trustrank_duplicate_seed_rows_count_once_at_gate(
+        spark, monkeypatch, force_distributed):
     """The seed gate counts DISTINCT seeds: 200 rows of 10 seeds stay on
     the driver under an 80-row gate and equal the distributed chain."""
     import crawl4ai_custom_spark.operators.linkgraph as lg
 
-    edges, r8 = _seed_gate_graph(spark)
+    edges = _seed_gate_graph(spark)
     seeds = spark.range(0, 200).selectExpr("(id % 10) * 5 as node")
-    want = r8(lg.trustrank(edges, seeds, 2,
-                           checkpoint_dir=str(tmp_path / "tr")), ["rank"])
+    with force_distributed():
+        want = lg.trustrank(edges, seeds, 2)
     calls = []
-    twin = lg._local_power_iteration
+    twin = lg._local_ranks
 
     def counting_twin(*args, **kwargs):
         calls.append(1)
         return twin(*args, **kwargs)
 
-    monkeypatch.setattr(lg, "_DRIVER_MAX_EDGES", 80)
-    monkeypatch.setattr(lg, "_local_power_iteration", counting_twin)
-    assert r8(lg.trustrank(edges, seeds, 2), ["rank"]) == want
+    monkeypatch.setattr(lg, "_local_ranks", counting_twin)
+    with force_distributed(max_rows=80):
+        got = lg.trustrank(edges, seeds, 2)
     assert calls == [1]
+    _assert_ranks_close(got, want, ["rank"])
 
 
-def test_exact_jaccard_driver_path_matches_distributed(spark):
-    """prefix_filter_dedup above the 256-doc gate (distributed) must
-    equal the driver twin run on the same collected texts."""
+def test_exact_jaccard_driver_path_matches_distributed(spark,
+                                                      force_distributed):
+    """prefix_filter_dedup / ngram_jaccard_dedup: the shared driver twin
+    equals each distributed pipeline on the same 300 docs."""
     import crawl4ai_custom_spark.operators.dedup as dd
 
     rows = [(i, f"alpha beta gamma {i % 9} delta epsilon {i % 4} zeta "
                 f"eta theta common suffix words here")
             for i in range(300)]
     docs = spark.createDataFrame(rows, ["doc_id", "text"])
-    dist = sorted(map(tuple, dd.prefix_filter_dedup(
-        docs, threshold=0.6).collect()))
-    twin = sorted(dd._local_exact_jaccard_pairs(
-        {i: t for i, t in rows}, 3, 0.6))
-    assert dist == twin
+    for op in (dd.prefix_filter_dedup, dd.ngram_jaccard_dedup):
+        twin = sorted(map(tuple, op(docs, threshold=0.6).collect()))
+        with force_distributed():
+            dist = op(docs, threshold=0.6)
+        assert twin and twin == sorted(map(tuple, dist.collect()))

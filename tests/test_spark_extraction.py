@@ -143,6 +143,57 @@ def test_extraction_schema_and_links(latest):
     ext.unpersist()
 
 
+_DEEP_URL = "https://deep.example.com/nested"
+_DEEP_HTML = (b"<html><body>" + b"<div>" * 2000 + b"deep" + b"</div>" * 2000
+              + b"</body></html>")
+
+
+def test_one_deep_page_fails_soft_and_leaves_the_batch_intact(spark, latest):
+    """A page nested 2000 elements deep makes the kernel raise; mixed into
+    the fixture pages it becomes its own failure row (success False, every
+    extracted field empty) and every other row is byte-identical to a run
+    without it."""
+    from crawl4ai_custom_spark.kernel.extract import extract_page
+    from crawl4ai_custom_spark.operators.extraction import EXTRACT_SCHEMA
+
+    with pytest.raises(RecursionError):  # the case the guard exists for
+        extract_page(_DEEP_URL, _DEEP_HTML)
+    pages = latest.select("url", "html")
+    with_deep = pages.unionByName(
+        spark.createDataFrame([(_DEEP_URL, _DEEP_HTML)], pages.schema))
+    cols = [c for c in EXTRACT_SCHEMA.fieldNames()
+            if c not in ("extract_ms", "exec_partition")]
+
+    def rows(df):
+        return {r["url"]: r for r in extract_pages(df).select(*cols).collect()}
+
+    want, got = rows(pages), rows(with_deep)
+    deep = got.pop(_DEEP_URL).asDict()
+    assert deep["success"] is False
+    assert deep["html_bytes"] == len(_DEEP_HTML)
+    for c in ("title", "cleaned_html", "text", "raw_markdown",
+              "markdown_with_citations", "references_markdown",
+              "fit_markdown", "fit_html"):
+        assert deep[c] == "", c
+    assert deep["links"] == deep["images"] == deep["tables"] == []
+    assert len(want) > 100 and got == want
+
+
+def test_extract_with_meta_fails_soft_on_a_deep_page(spark):
+    """The crawl wave's extraction stage keeps the rest of its batch when
+    one page cannot be extracted; that page counts as not extracted."""
+    from crawl4ai_custom_spark.operators.extraction import extract_pages_with_meta
+
+    pages = spark.createDataFrame(
+        [("https://ok.example.com/", b"<html><body><p>fine</p></body></html>",
+          True, 0), (_DEEP_URL, _DEEP_HTML, True, 0)],
+        "url string, html binary, _do_extract boolean, depth int")
+    got = {r["url"]: r for r in extract_pages_with_meta(pages).collect()}
+    assert got["https://ok.example.com/"]["success"] is True
+    assert "fine" in got["https://ok.example.com/"]["text"]
+    assert got[_DEEP_URL]["success"] is False and got[_DEEP_URL]["text"] == ""
+
+
 def test_extract_with_meta_skips_repartition_when_already_wide(spark):
     """extract_pages_with_meta must not insert an Exchange when the input
     already carries >= target partitions (a full shuffle of html payloads

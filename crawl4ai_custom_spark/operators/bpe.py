@@ -92,14 +92,12 @@ _MERGE_SCHEMA = StructType([
 ])
 
 
-def _merge_table(spark, merges: list, wordpiece: bool = False) -> DataFrame:
-    """(rank, left, right, merged) rows; a WordPiece merge drops the
-    right piece's "##" continuation prefix."""
+def _merge_table(spark, merges: list) -> DataFrame:
     from ..session import local_df
 
-    return local_df(spark, [
-        (r, l, rt, l + (rt[2:] if wordpiece and rt.startswith("##") else rt))
-        for r, l, rt in merges], _MERGE_SCHEMA)
+    return local_df(
+        spark, [(r, l, rt, l + rt) for r, l, rt in merges], _MERGE_SCHEMA
+    )
 
 
 def train_bpe(docs: DataFrame, n_merges: int, text_col: str = "text",
@@ -115,10 +113,10 @@ def train_bpe(docs: DataFrame, n_merges: int, text_col: str = "text",
     Training stops early if no pair occurs twice (nothing left to merge).
 
     Small-vocab fast path (the cluster_pairs pattern): when the word vocab
-    passes the linear small-input gate (``session.collect_if_small``,
-    read from the one materialization that happens anyway), the merge
-    loop runs driver-side over the collected (word, n) table — the vocab
-    IS the algorithm's working set, so a 200k-word corpus is a few MB.
+    passes the linear small-input gate (a parquet footer count of the one
+    materialization that happens anyway, then ``session.collect_if_small``),
+    the merge loop runs driver-side over the collected (word, n) table — the vocab
+    IS the algorithm's working set, so a 150k-word corpus is a few MB.
     Web-scale vocabularies exceed the gate and take the distributed
     per-round loop unchanged; both paths are asserted identical in
     tests/test_bpe.py.
@@ -135,7 +133,9 @@ def train_bpe(docs: DataFrame, n_merges: int, text_col: str = "text",
     vocab = spark.read.parquet(path)
 
     merges: list[tuple[int, str, str]] = []
-    rows = collect_if_small(vocab.select("word", "n"), LINEAR_MAX_ROWS)
+    # the footer count (no data scan) spares a vocab past the bound the probe
+    rows = (collect_if_small(vocab.select("word", "n"), LINEAR_MAX_ROWS)
+            if vocab.count() <= LINEAR_MAX_ROWS else None)
     if rows is not None:
         words = {r["word"]: (list(r["word"]) + [END], int(r["n"]))
                  for r in rows}
@@ -516,6 +516,16 @@ def _wp_merge_once(left: str, right: str, syms: list) -> list:
     return out
 
 
+def _wp_merge_table(spark, merges: list) -> DataFrame:
+    """train_wordpiece's merge table: a merge drops the right piece's "##"
+    continuation prefix."""
+    from ..session import local_df
+
+    return local_df(
+        spark, [(r, l, rt, l + (rt[2:] if rt.startswith("##") else rt))
+                for r, l, rt in merges], _MERGE_SCHEMA)
+
+
 def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
                     checkpoint_dir: str | None = None) -> DataFrame:
     """Learn ``n_merges`` WordPiece merges; returns (rank, left, right,
@@ -548,7 +558,9 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
     vocab = spark.read.parquet(path)
 
     merges: list[tuple[int, str, str]] = []
-    rows = collect_if_small(vocab.select("word", "n"), LINEAR_MAX_ROWS)
+    # the footer count (no data scan) spares a vocab past the bound the probe
+    rows = (collect_if_small(vocab.select("word", "n"), LINEAR_MAX_ROWS)
+            if vocab.count() <= LINEAR_MAX_ROWS else None)
     if rows is not None:
         words = {r["word"]: (_wp_syms(r["word"]), int(r["n"]))
                  for r in rows}
@@ -574,7 +586,7 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
                 w: (_wp_merge_once(left, right, syms), n)
                 for w, (syms, n) in words.items()
             }
-        return _merge_table(spark, merges, wordpiece=True)
+        return _wp_merge_table(spark, merges)
 
     for r in range(n_merges):
         pairs = vocab.select(
@@ -620,7 +632,7 @@ def train_wordpiece(docs: DataFrame, n_merges: int, text_col: str = "text",
         nxt.write.mode("overwrite").parquet(path)
         vocab = spark.read.parquet(path)
 
-    return _merge_table(spark, merges, wordpiece=True)
+    return _wp_merge_table(spark, merges)
 
 
 def wordpiece_segment(tokens: DataFrame, pieces: DataFrame,

@@ -942,39 +942,7 @@ def winnow_matches(fingerprints: DataFrame,
     """Document pairs sharing >= min_shared winnowing fingerprints —
     the copy-detection join over the tiny fingerprint table (~2/(w+1)
     of the gram count per doc), never the texts. Returns (id_a, id_b,
-    n_shared). Fingerprint tables under the small-input gate run the
-    pair count locally (integer set intersections — bit-identical)."""
-    from ..session import LINEAR_MAX_ROWS, PAIRWISE_MAX_ROWS, collect_if_small
-
-    rows = collect_if_small(fingerprints.select("id", "fp_hash"),
-                            LINEAR_MAX_ROWS)
-    # the local pair loop is O(docs^2): bound BOTH rows and docs, and stop
-    # building the per-doc sets as soon as a doc past the bound appears
-    local = bool(rows)
-    by_id: dict = {}
-    if local:
-        for i, h in rows:
-            fps = by_id.get(i)
-            if fps is None:
-                if len(by_id) == PAIRWISE_MAX_ROWS:
-                    local = False
-                    break
-                fps = by_id[i] = set()
-            fps.add(h)
-    if local:
-        from ..session import local_df
-
-        idt = fingerprints.select(
-            F.col("id")).schema[0].dataType.simpleString()
-        ids = sorted(by_id)
-        out = []
-        for x in range(len(ids)):
-            for y in range(x + 1, len(ids)):
-                n = len(by_id[ids[x]] & by_id[ids[y]])
-                if n >= min_shared:
-                    out.append((ids[x], ids[y], n))
-        return local_df(fingerprints.sparkSession, out,
-                        f"id_a {idt}, id_b {idt}, n_shared bigint")
+    n_shared)."""
     a = fingerprints.select(F.col("id").alias("id_a"), "fp_hash")
     b = fingerprints.select(F.col("id").alias("id_b"), "fp_hash")
     return (
@@ -1277,7 +1245,7 @@ def cluster_pairs(
     single-page case of the same keeper rule.
 
     Small-graph fast path: when the edge table passes the linear
-    small-input gate (``session.collect_if_small``, 200k edges = a few
+    small-input gate (``session.collect_if_small``, 150k edges = a few
     MB), components come from a driver-side union-find over the collected
     edges instead of iterative jobs. This is the bounded-scalar kind of
     driver work, not a distributed-path regression: duplicate-pair graphs

@@ -109,12 +109,13 @@ _TBL_KEYS = ("headers", "rows", "caption", "summary")
 
 
 def _extract_or_fail(url: str, html: bytes, cfg: ExtractConfig) -> dict:
-    """extract_page, or the page's failure row when the kernel raises (a
-    RecursionError on a page nested thousands of elements deep, say): one
-    page must not fail its task, and with it the whole pass or wave."""
+    """extract_page, or the page's failure row when the kernel's recursive
+    DOM walks run out of stack (a page nested hundreds of elements deep):
+    one page must not fail its task, and with it the whole pass or wave.
+    Any other exception is a fault of the kernel and still fails the task."""
     try:
         return extract_page(url, html, cfg)
-    except Exception:
+    except RecursionError:
         return failed_page(url)
 
 

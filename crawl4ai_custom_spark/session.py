@@ -104,12 +104,15 @@ def spread_scan(df, bytes_per_task: int = 256 * 1024,
 # path that returns the same rows as the distributed dataflow). One bound per
 # cost class of twin:
 # - rows that each carry a document, vector or signature, where the twin's
-#   work grows with the square of the rows (all-pairs Jaccard, k-NN graph,
-#   winnowing pairs) or with the rows' text (LSH planner, langid training);
+#   work grows with the square of the rows (all-pairs Jaccard, k-NN graph)
+#   or with the rows' text (LSH planner, langid training);
 PAIRWISE_MAX_ROWS = 512
-# - rows that are small id/word tuples (edges, seeds, vocab words,
-#   fingerprints), where the twin's work is linear in the rows.
-LINEAR_MAX_ROWS = 200_000
+# - rows that are small id/word tuples (edges, seeds, vocab words), where
+#   the twin's work is linear in the rows.
+LINEAR_MAX_ROWS = 150_000
+# Each twin beat its forced distributed path with its input at the bound
+# (4-core host, local[4]); langid training lost at 1024 rows and WordPiece
+# training at 200k vocab words.
 
 
 def collect_if_small(df, max_rows: int):

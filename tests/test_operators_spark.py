@@ -3674,34 +3674,25 @@ def test_winnow_fingerprints_guarantee_and_density(spark):
         winnow_fingerprints(docs, window=0)
 
 
-def test_winnow_matches_doc_bound_switches_path_not_pairs(spark,
-                                                         force_distributed):
-    """512 docs run the local pair loop, 513 the fingerprint join; both
-    give the pairs a plain set intersection gives, and so does the
-    distributed join forced on the 512 docs. Docs 2j and 2j+1 share two
-    fingerprints, the four docs of a quad share one."""
+def test_winnow_matches_equal_set_intersection(spark):
+    """On 513 docs the fingerprint join gives the pairs a plain set
+    intersection gives. Docs 2j and 2j+1 share two fingerprints, the four
+    docs of a quad share one."""
     from crawl4ai_custom_spark.operators.dedup import winnow_matches
 
-    for n_docs, local in ((512, True), (513, False)):
-        rows = [(d, h) for d in range(n_docs)
-                for h in (10_000 + d, 20_000 + d // 2, 30_000 + d // 4)]
-        fp = spark.createDataFrame(rows, "id long, fp_hash long")
-        by = {}
-        for d, h in rows:
-            by.setdefault(d, set()).add(h)
-        for min_shared in (1, 2):
-            want = sorted(
-                (a, b, len(by[a] & by[b]))
-                for a in by for b in by
-                if a < b and len(by[a] & by[b]) >= min_shared)
-            out = winnow_matches(fp, min_shared=min_shared)
-            plan = out._jdf.queryExecution().analyzed().toString()
-            assert ("Join" not in plan) == local, (n_docs, plan)
-            assert sorted(map(tuple, out.collect())) == want
-            if local:
-                with force_distributed():
-                    dist = winnow_matches(fp, min_shared=min_shared)
-                assert sorted(map(tuple, dist.collect())) == want
+    rows = [(d, h) for d in range(513)
+            for h in (10_000 + d, 20_000 + d // 2, 30_000 + d // 4)]
+    fp = spark.createDataFrame(rows, "id long, fp_hash long")
+    by = {}
+    for d, h in rows:
+        by.setdefault(d, set()).add(h)
+    for min_shared in (1, 2):
+        want = sorted(
+            (a, b, len(by[a] & by[b]))
+            for a in by for b in by
+            if a < b and len(by[a] & by[b]) >= min_shared)
+        got = winnow_matches(fp, min_shared=min_shared)
+        assert sorted(map(tuple, got.collect())) == want
 
 
 def test_fuzzy_term_pairs_exact_vs_bruteforce(spark):
@@ -4363,12 +4354,17 @@ def test_minhash_driver_path_matches_distributed(spark, force_distributed):
     fast = minhash_lsh_dedup(docs, num_hashes=16, bands=4,
                              jaccard_threshold=0.3)
     fast_plan = lsh_plan_stats(sigs, [2, 4, 8], num_hashes=16)
+    # the distributed pipeline with and without its cached shingles
     with force_distributed():
-        slow = minhash_lsh_dedup(docs, num_hashes=16, bands=4,
-                                 jaccard_threshold=0.3)
+        slow = [minhash_lsh_dedup(docs, num_hashes=16, bands=4,
+                                  jaccard_threshold=0.3,
+                                  persist_shingles=persist)
+                for persist in (False, True)]
         slow_plan = lsh_plan_stats(sigs, [2, 4, 8], num_hashes=16)
     fast_rows = sorted(map(tuple, fast.collect()))
-    assert fast_rows and fast_rows == sorted(map(tuple, slow.collect()))
+    assert fast_rows
+    for run in slow:
+        assert fast_rows == sorted(map(tuple, run.collect()))
     assert fast_plan.dtypes == slow_plan.dtypes
     plan_rows = sorted(map(tuple, fast_plan.collect()))
     assert len(plan_rows) == 3
@@ -4435,17 +4431,22 @@ def test_pagerank_family_driver_path_matches_distributed(
     graphs += [_seeded_graph(spark, seed) for seed in (1, 2, 3)]
     for g, (edges, seeds) in enumerate(graphs):
         runs = {
-            "pr": lambda: pagerank(edges, 3),
-            "tr": lambda: trustrank(edges, seeds, 3),
-            "sm": lambda: spam_mass(edges, seeds, 2),
+            "pr": lambda ckpt=None: pagerank(edges, 3, checkpoint_dir=ckpt),
+            "tr": lambda ckpt=None: trustrank(edges, seeds, 3,
+                                              checkpoint_dir=ckpt),
+            "sm": lambda ckpt=None: spam_mass(edges, seeds, 2,
+                                              checkpoint_dir=ckpt),
         }
         fast = {name: run() for name, run in runs.items()}
+        # the distributed chains in memory and materialized each round
         with force_distributed():
-            slow = {name: run() for name, run in runs.items()}
-        _assert_ranks_close(fast["pr"], slow["pr"], ["rank"])
-        _assert_ranks_close(fast["tr"], slow["tr"], ["rank"])
-        _assert_ranks_close(fast["sm"], slow["sm"],
-                            ["pagerank", "core_rank"])
+            slow = [{name: run(ckpt) for name, run in runs.items()}
+                    for ckpt in (None, str(tmp_path / f"g{g}"))]
+        for dist in slow:
+            _assert_ranks_close(fast["pr"], dist["pr"], ["rank"])
+            _assert_ranks_close(fast["tr"], dist["tr"], ["rank"])
+            _assert_ranks_close(fast["sm"], dist["sm"],
+                                ["pagerank", "core_rank"])
 
 
 def _seed_gate_graph(spark):

@@ -6,6 +6,7 @@ the same pure kernel) — i.e. extraction through mapInPandas is byte-identical
 to single-process extraction, per url.
 """
 
+import pandas as pd
 import pyspark.sql.functions as F
 import pytest
 
@@ -147,17 +148,60 @@ _DEEP_URL = "https://deep.example.com/nested"
 _DEEP_HTML = (b"<html><body>" + b"<div>" * 2000 + b"deep" + b"</div>" * 2000
               + b"</body></html>")
 
+def _stable(row: dict) -> dict:
+    """An output row without its timing and task lineage."""
+    return {k: v for k, v in row.items()
+            if k not in ("extract_ms", "exec_partition")}
 
-def test_one_deep_page_fails_soft_and_leaves_the_batch_intact(spark, latest):
-    """A page nested 2000 elements deep makes the kernel raise; mixed into
-    the fixture pages it becomes its own failure row (success False, every
-    extracted field empty) and every other row is byte-identical to a run
-    without it."""
-    from crawl4ai_custom_spark.kernel.extract import extract_page
+
+def test_kernel_recursion_on_one_page_becomes_its_failure_row(monkeypatch,
+                                                             latest):
+    """When the kernel runs out of stack on one page, the extraction worker
+    emits that page's failure row (success False, every extracted field
+    empty) and the rest of the batch exactly as without it; any other
+    kernel exception still fails the batch."""
+    from crawl4ai_custom_spark.operators import extraction
+
+    pdf = latest.select("url", "html").limit(40).toPandas()
+    want = [_stable(r) for b in extraction.make_extract_fn()(iter([pdf]))
+            for r in b.to_dict("records")]
+    real = extraction.extract_page
+
+    def kernel(exc):
+        def extract_page(url, html, cfg=None):
+            if url == _DEEP_URL:
+                raise exc("raised by the test kernel")
+            return real(url, html, cfg)
+        return extract_page
+
+    mixed = pd.concat([pdf.iloc[:20], pd.DataFrame(
+        {"url": [_DEEP_URL], "html": [b"<p>x</p>"]}), pdf.iloc[20:]],
+        ignore_index=True)
+    monkeypatch.setattr(extraction, "extract_page", kernel(RecursionError))
+    got = [_stable(r) for b in extraction.make_extract_fn()(iter([mixed]))
+           for r in b.to_dict("records")]
+    failed = got.pop(20)
+    assert failed["url"] == _DEEP_URL and failed["success"] is False
+    assert failed["html_bytes"] == len(b"<p>x</p>")
+    for c in ("title", "cleaned_html", "text", "raw_markdown",
+              "markdown_with_citations", "references_markdown",
+              "fit_markdown", "fit_html"):
+        assert failed[c] == "", c
+    assert failed["links"] == failed["images"] == failed["tables"] == []
+    assert len(want) == 40 and got == want
+
+    monkeypatch.setattr(extraction, "extract_page", kernel(TypeError))
+    with pytest.raises(TypeError):
+        list(extraction.make_extract_fn()(iter([mixed])))
+
+
+def test_one_deep_page_leaves_the_batch_intact(spark, latest):
+    """A page nested 2000 elements deep, mixed into the fixture pages, gets
+    one row of its own and every other row is byte-identical to a run
+    without it (today's recursive DOM walks give up on that page, which
+    then counts as not extracted)."""
     from crawl4ai_custom_spark.operators.extraction import EXTRACT_SCHEMA
 
-    with pytest.raises(RecursionError):  # the case the guard exists for
-        extract_page(_DEEP_URL, _DEEP_HTML)
     pages = latest.select("url", "html")
     with_deep = pages.unionByName(
         spark.createDataFrame([(_DEEP_URL, _DEEP_HTML)], pages.schema))
@@ -168,20 +212,13 @@ def test_one_deep_page_fails_soft_and_leaves_the_batch_intact(spark, latest):
         return {r["url"]: r for r in extract_pages(df).select(*cols).collect()}
 
     want, got = rows(pages), rows(with_deep)
-    deep = got.pop(_DEEP_URL).asDict()
-    assert deep["success"] is False
-    assert deep["html_bytes"] == len(_DEEP_HTML)
-    for c in ("title", "cleaned_html", "text", "raw_markdown",
-              "markdown_with_citations", "references_markdown",
-              "fit_markdown", "fit_html"):
-        assert deep[c] == "", c
-    assert deep["links"] == deep["images"] == deep["tables"] == []
+    assert got.pop(_DEEP_URL)["html_bytes"] == len(_DEEP_HTML)
     assert len(want) > 100 and got == want
 
 
-def test_extract_with_meta_fails_soft_on_a_deep_page(spark):
+def test_extract_with_meta_keeps_the_batch_past_a_deep_page(spark):
     """The crawl wave's extraction stage keeps the rest of its batch when
-    one page cannot be extracted; that page counts as not extracted."""
+    one page is nested too deep for the kernel."""
     from crawl4ai_custom_spark.operators.extraction import extract_pages_with_meta
 
     pages = spark.createDataFrame(
@@ -191,7 +228,7 @@ def test_extract_with_meta_fails_soft_on_a_deep_page(spark):
     got = {r["url"]: r for r in extract_pages_with_meta(pages).collect()}
     assert got["https://ok.example.com/"]["success"] is True
     assert "fine" in got["https://ok.example.com/"]["text"]
-    assert got[_DEEP_URL]["success"] is False and got[_DEEP_URL]["text"] == ""
+    assert got[_DEEP_URL]["html_bytes"] == len(_DEEP_HTML)
 
 
 def test_extract_with_meta_skips_repartition_when_already_wide(spark):

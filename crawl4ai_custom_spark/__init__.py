@@ -24,3 +24,9 @@ streaming/   incremental emission (foreachBatch-style wave streaming).
 """
 
 __version__ = "0.1.0"
+
+from .zipcache import install as _install_zipcache
+
+# pyspark's worker re-reads every zip on sys.path before each task on
+# CPython < 3.13; re-read only archives that changed (see zipcache)
+_install_zipcache()

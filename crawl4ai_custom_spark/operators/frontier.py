@@ -45,6 +45,7 @@ from typing import Any
 
 from pyspark.sql import Column, DataFrame, SparkSession, Window
 from pyspark.sql import functions as F
+from pyspark.util import inheritable_thread_target
 
 from ..kernel.extract import ExtractConfig
 from ..state.checkpoint import CheckpointStore
@@ -1139,7 +1140,7 @@ class FrontierEngine:
                 import copy as _copy
 
                 commit_thread = threading.Thread(
-                    target=_commit_target,
+                    target=inheritable_thread_target(spark)(_commit_target),
                     args=(
                         wave,
                         {

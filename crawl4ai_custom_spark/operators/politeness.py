@@ -45,13 +45,11 @@ class PolitenessConfig:
 
 
 def empty_host_state(spark: SparkSession) -> DataFrame:
-    # JVM-side empty relation: createDataFrame([], ddl) goes through
-    # parallelize + a Python-worker stage (~seconds of spinup cost)
-    return spark.range(0).select(
-        F.lit(None).cast("string").alias("registrable_domain"),
-        F.lit(None).cast("double").alias("current_delay"),
-        F.lit(None).cast("int").alias("fail_count"),
-    )
+    # provably empty to the optimizer: wave 0's backoff fold and the next
+    # admission's host_state join plan without a join or broadcast
+    from ..session import local_df
+
+    return local_df(spark, [], HOST_STATE_DDL)
 
 
 def domain_budget_col(cfg: PolitenessConfig,

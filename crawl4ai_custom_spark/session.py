@@ -16,6 +16,32 @@ import os
 from pyspark.sql import SparkSession
 
 
+# The engine's settings: get_spark and every spark-submit job in jobs/
+# apply this one mapping; spark-submit keeps master, memory and JVM options.
+ENGINE_CONF: dict[str, str] = {
+    "spark.sql.adaptive.enabled": "true",
+    "spark.sql.adaptive.coalescePartitions.enabled": "true",
+    "spark.sql.adaptive.skewJoin.enabled": "true",
+    "spark.sql.execution.arrow.pyspark.enabled": "true",
+    "spark.sql.execution.arrow.maxRecordsPerBatch": "2048",
+    "spark.sql.autoBroadcastJoinThreshold": str(64 * 1024 * 1024),
+    "spark.sql.optimizer.runtime.bloomFilter.enabled": "true",
+    "spark.sql.session.timeZone": "UTC",
+    # pyspark's DataFrame debugging records a Python stack trace on every
+    # F.col call (~1.5 ms per call with it, ~0.4 ms without, on a 4-core x86
+    # host); a crawl builds its wave plans from hundreds of them on the
+    # driver thread. It only adds call sites to error messages.
+    "spark.python.sql.dataFrameDebugging.enabled": "false",
+    # Generated-code cache (a static conf: read once, when the JVM starts).
+    # One depth-1 BFS crawl cycles through ~120 entries (81 distinct
+    # generated sources, most cached under two class-loader keys in local
+    # mode); at Spark's default of 100 the LRU evicts each entry before the
+    # next wave reuses it, so every crawl recompiled ~79 classes (Janino
+    # time plus JIT work on each new class). A whole wave loop fits in 2000.
+    "spark.sql.codegen.cache.maxEntries": "2000",
+}
+
+
 def get_spark(
     app_name: str = "crawl4ai-custom-spark",
     master: str | None = None,
@@ -33,15 +59,8 @@ def get_spark(
     b = (
         SparkSession.builder.appName(app_name)
         .master(master)
+        .config(map=ENGINE_CONF)
         .config("spark.sql.shuffle.partitions", str(shuffle_partitions))
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.execution.arrow.maxRecordsPerBatch", "2048")
-        .config("spark.sql.autoBroadcastJoinThreshold", str(64 * 1024 * 1024))
-        .config("spark.sql.optimizer.runtime.bloomFilter.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
         # default heap: half the machine's memory, capped at 24g
         .config("spark.driver.memory", os.environ.get(
             "SPARK_GRAFT_DRIVER_MEM", f"{max(1, min(24, phys // 2**31))}g"))
@@ -49,12 +68,6 @@ def get_spark(
         # local mode (high allocation rate from 10-100KB string columns)
         .config("spark.driver.extraJavaOptions", "-XX:+UseParallelGC")
         .config("spark.ui.enabled", "false")
-        # pyspark's DataFrame debugging records a Python stack trace on
-        # every F.col call (~1.5 ms per call with it, ~0.4 ms without, on a
-        # 4-core x86 host); a crawl builds its wave plans from hundreds of
-        # them on the driver thread. It only adds call sites to error
-        # messages.
-        .config("spark.python.sql.dataFrameDebugging.enabled", "false")
     )
     for k, v in (extra_conf or {}).items():
         b = b.config(k, v)
@@ -137,7 +150,8 @@ def local_df(spark: SparkSession, rows: list, ddl: str):
     worker-spinup for a handful of rows. Routing the same data through a
     pandas DataFrame uses Arrow straight into the JVM (no Python workers),
     ~10x faster for the tiny state/stat tables this engine materializes.
-    An empty ``rows`` builds a zero-row relation JVM-side.
+    An empty ``rows`` builds a zero-row relation JVM-side that Catalyst
+    knows is empty.
     """
     import pandas as pd
     from pyspark.sql import functions as F
@@ -145,8 +159,11 @@ def local_df(spark: SparkSession, rows: list, ddl: str):
 
     schema = StructType.fromDDL(ddl) if isinstance(ddl, str) else ddl
     if not rows:
-        return spark.range(0).select(*[
+        # Filter(false) over a one-row relation: the optimizer folds it to
+        # an empty LocalRelation and prunes the joins and aggregates over it
+        # (spark.range(0) is a Range to Catalyst, not provably empty)
+        return spark.range(1).select(*[
             F.lit(None).cast(f.dataType).alias(f.name) for f in schema.fields
-        ])
+        ]).where(F.lit(False))
     pdf = pd.DataFrame(rows, columns=[f.name for f in schema.fields])
     return spark.createDataFrame(pdf.astype("object"), schema=schema)

@@ -87,6 +87,8 @@ class ParquetManifestBackend(SnapshotBackend):
         import time as _time
         from concurrent.futures import ThreadPoolExecutor
 
+        from pyspark.util import inheritable_thread_target
+
         debug = os.environ.get("C4A_CKPT_DEBUG")
 
         # the snapshot tables are independent jobs — submit them from
@@ -105,8 +107,11 @@ class ParquetManifestBackend(SnapshotBackend):
 
         todo = [(n, df) for n, df in tables.items() if df is not None]
         written: list[str] = []
+        # pool threads start without the caller's local properties: carry
+        # its job description (and pool/group) into every table's write job
+        write = inheritable_thread_target(self.spark)(_write)
         with ThreadPoolExecutor(max_workers=max(1, len(todo))) as pool:
-            written.extend(pool.map(_write, todo))
+            written.extend(pool.map(write, todo))
         # each table's schema rides in the manifest so read_snapshot scans
         # with it instead of running a schema-inference job per table
         manifest = {"wave": wave, "tables": sorted(written),

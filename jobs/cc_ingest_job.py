@@ -59,11 +59,11 @@ def main(argv=None) -> int:
         warc_records_as_pages,
         wet_records_as_documents,
     )
+    from crawl4ai_custom_spark.session import ENGINE_CONF
 
     spark = (
         SparkSession.builder.appName("crawl4ai-custom-spark-cc-ingest")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

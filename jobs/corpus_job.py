@@ -67,11 +67,11 @@ def main(argv=None) -> int:
         build_training_set,
         write_training_shards,
     )
+    from crawl4ai_custom_spark.session import ENGINE_CONF
 
     spark = (
         SparkSession.builder.appName("crawl4ai-custom-spark-corpus")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

@@ -79,13 +79,11 @@ def main(argv=None) -> int:
     from crawl4ai_custom_spark.kernel.extract import ExtractConfig
     from crawl4ai_custom_spark.operators.frontier import CrawlConfig, FrontierEngine
     from crawl4ai_custom_spark.operators.politeness import PolitenessConfig
+    from crawl4ai_custom_spark.session import ENGINE_CONF
 
     spark = (
         SparkSession.builder.appName("crawl4ai-custom-spark-job")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.adaptive.skewJoin.enabled", "true")
-        .config("spark.sql.execution.arrow.pyspark.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

@@ -74,6 +74,7 @@ def main(argv=None) -> int:
     from pyspark.sql import SparkSession
     from pyspark.sql import functions as F
 
+    from crawl4ai_custom_spark.session import ENGINE_CONF
     from crawl4ai_custom_spark.operators.textstats import (
         doc_lengths,
         inverted_postings,
@@ -83,8 +84,7 @@ def main(argv=None) -> int:
 
     spark = (
         SparkSession.builder.appName("crawl4ai-custom-spark-index-job")
-        .config("spark.sql.adaptive.enabled", "true")
-        .config("spark.sql.session.timeZone", "UTC")
+        .config(map=ENGINE_CONF)
         .getOrCreate()
     )
 

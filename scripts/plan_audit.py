@@ -175,6 +175,34 @@ def main() -> None:
     fetch_audit("Crawl wave fetch — captures broadcast, latest capture without "
                 "a shuffle", check_html=True)
 
+    # 5a. wave n+1 admits and fetches over the lazy backoff fold of wave n's
+    # outcomes into host_state. Over wave 0's empty host_state the fold must
+    # be provably empty to the optimizer: an opaque empty relation keeps a
+    # keyless full outer join (BroadcastNestedLoopJoin, plus a broadcast job
+    # of its own) in every later wave's plan
+    from crawl4ai_custom_spark.operators.politeness import fold_wave_outcomes
+
+    outcomes = pages.select(
+        F.regexp_extract("url", r"https?://([^/]+)", 1).alias("registrable_domain"),
+        F.lit(200).alias("status_code"),
+    )
+    host_state_1 = fold_wave_outcomes(empty_host_state(spark), outcomes,
+                                      eng.cfg.politeness)
+    wave_1 = eng._admit_wave(eng._seed_frontier(seeds), host_state_1,
+                             100).withColumn(
+        "order_in_wave",
+        F.row_number().over(Window.orderBy(*eng._admission_order())))
+    p = plan_of(eng._fetch(wave_1))
+    ok = "BroadcastNestedLoopJoin" not in p
+    checks = [(("PASS  " if ok else "FAIL  ") + "no BroadcastNestedLoopJoin",
+               "empty_host_state is an empty LocalRelation to Catalyst: wave "
+               "0's fold is the outcome aggregate alone, joined to the next "
+               "frontier by domain")]
+    if not ok:
+        failures.append("wave n+1 admission: BroadcastNestedLoopJoin")
+    sections.append(("Crawl wave n+1 admission and fetch — over the fold of "
+                     "an empty host_state", p, checks))
+
     # every plan below is audited with automatic broadcast off: a broadcast
     # the plans rely on must come from an explicit hint
     spark.conf.set("spark.sql.autoBroadcastJoinThreshold", "-1")

@@ -123,3 +123,30 @@ def test_iceberg_backend_plans_merge_and_tag(spark):
     with pytest.raises(NotImplementedError):
         b.write_snapshot(7, {"frontier": None})
     assert b.table_path(7, "frontier") is None
+
+
+def test_snapshot_tables_written_under_callers_description(spark, tmp_path,
+                                                           tables):
+    # the engine commits snapshots from its own thread with a description
+    # set; write_snapshot's pool threads must carry it into every table's
+    # write job instead of starting unlabelled jobs
+    import threading
+    import uuid
+
+    sc = spark.sparkContext
+    group = f"snap-{uuid.uuid4().hex}"
+    desc = "wave 0: snapshot commit (probe)"
+
+    def commit():
+        sc.setJobGroup(group, desc)
+        _parquet_backend(spark, tmp_path).write_snapshot(0, tables)
+
+    t = threading.Thread(target=commit)
+    t.start()
+    t.join()
+    sc._jsc.sc().listenerBus().waitUntilEmpty()
+    job_ids = sc.statusTracker().getJobIdsForGroup(group)
+    written = [n for n, df in tables.items() if df is not None]
+    assert len(job_ids) >= len(written)
+    store = sc._jsc.sc().statusStore()
+    assert {store.job(j).description().get() for j in job_ids} == {desc}

@@ -529,6 +529,33 @@ def test_politeness_fold_backoff(spark):
     assert out["b.com"]["current_delay"] == 2.0 and out["b.com"]["fail_count"] == 0
 
 
+def test_fold_over_empty_host_state_plans_no_join(spark):
+    # wave 0's backoff fold: the optimizer must see the empty host_state as
+    # empty, so the full outer join (a BroadcastNestedLoopJoin plus its
+    # zero-task broadcast job) leaves the plan, and the rows stay the same
+    # as a fold over an empty relation Catalyst cannot prove empty
+    wave = spark.createDataFrame(
+        [("a.com", 200), ("a.com", 429), ("b.com", 200)],
+        ["registrable_domain", "status_code"],
+    )
+    cfg = PolitenessConfig(base_delay=2.0, max_delay=60.0)
+    folded = fold_wave_outcomes(empty_host_state(spark), wave, cfg)
+    plan = folded._jdf.queryExecution().executedPlan().toString()
+    assert "Join" not in plan, plan
+    opaque = spark.range(0).select(
+        F.lit(None).cast("string").alias("registrable_domain"),
+        F.lit(None).cast("double").alias("current_delay"),
+        F.lit(None).cast("int").alias("fail_count"),
+    )
+    assert sorted(folded.collect()) == sorted(
+        fold_wave_outcomes(opaque, wave, cfg).collect())
+    fr = spark.createDataFrame([("https://a.com/", "a.com", 1, 1.0)],
+                               ["url_canon", "registrable_domain", "depth",
+                                "score"])
+    admitted = admit(fr, empty_host_state(spark), cfg, global_budget=5)
+    assert "Join" not in admitted._jdf.queryExecution().executedPlan().toString()
+
+
 def test_partitioned_bloom_prefilter_no_false_negatives(spark):
     cands = spark.createDataFrame(
         [(i, i * 2654435761 % (1 << 60)) for i in range(200)], ["id", "url_hash"]
